@@ -187,13 +187,12 @@ def _q_tc(strategy: str, n_blocks: int | None = None):
 
 def _q_tc_blocked_skewed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked TC on the planted-mega-hub graph (vertex 1 adjacent to every
-    part) with the hub route EXPLICITLY engaged (threshold 500: the mega
-    hub and the densest parts route through the broadcast bitset/galloping
-    probes) — must agree exactly with the plain 3-way-join oracle. The
-    route is opt-in since round 3 (BENCH.md §5h); this query keeps the
-    whole hub path driver-verified every round."""
+    part) on the DEFAULT route — must agree exactly with the plain
+    3-way-join oracle. The degree orientation bounds the mega-hub's
+    out-adjacency, so the default route needs no hub path; this query
+    keeps that skew case driver-verified every round."""
     edges = tpch_graph.copurchase_hub_edges(spark, sf_dir)
-    return triangles.count_triangles(edges, strategy="blocked", hub_threshold=500)
+    return triangles.count_triangles(edges, strategy="blocked")
 
 
 def _q_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:

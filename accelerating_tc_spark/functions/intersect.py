@@ -2,18 +2,14 @@
 
 The reference implements ~15 SIMD set-intersection variants (QFilter, BSR,
 shuffling, galloping — reference `vertex_ordering/other_order/src/set_operation.cpp`
-and `intersection_algos.cpp`, SURVEY.md §2.7). On Spark the same roles are
-played by three numpy strategies, chosen per input shape:
-
-- **batch merge** (`intersect_count_pairs`): one C-speed ``np.intersect1d`` over
-  a whole Arrow batch of (set_a, set_b) pairs, using a row-id encoding so a
-  single call intersects every pair at once. Analog of the scalar/SIMD merge
-  family (reference `set_operation.cpp:112-144`).
-- **galloping** (`intersect_count_galloping`): ``np.searchsorted`` of the small
-  side into the large side — the exponential-probe kernel for skewed pairs
-  (reference `intersection_algos.cpp:88-148`).
-- **bitset** (`bitset_membership_count`): packed-bitmap membership for hub
-  vertices (reference Bisson `tc.cu:18-104`, BSR `set_operation.cpp:554+`).
+and `intersection_algos.cpp`, SURVEY.md §2.7). On Spark one batch kernel
+covers the wedge-join strategy: **batch merge** (`intersect_count_pairs`),
+one C-speed membership probe over a whole Arrow batch of (set_a, set_b)
+pairs, using a row-id encoding so a single call intersects every pair at
+once — the analog of the scalar/SIMD merge family (reference
+`set_operation.cpp:112-144`). Its sorted fast path probes the smaller
+encoded stream into the larger with searchsorted, i.e. galloping. The
+blocked routes use the CSR kernel in functions/csr.py.
 
 No per-row Python in the hot path: every function takes whole batches and
 loops, when it must, over *rows* with C-speed per-row ops — never over
@@ -107,134 +103,3 @@ def intersect_count_pairs(a_sets, b_sets) -> np.ndarray:
     enc_a = rows_a * max_v + (flat_a - off)
     enc_b = rows_b * max_v + (flat_b - off)
     return encoded_intersect_counts(enc_a, rows_a, enc_b, rows_b, n)
-
-
-def intersect_count_galloping(a: np.ndarray, b: np.ndarray) -> int:
-    """|a ∩ b| via searchsorted of the smaller side into the larger.
-
-    Vectorized galloping (reference `intersection_algos.cpp:88-148`): right for
-    |a| << |b| (hub adjacency probed by a small list). Both inputs sorted+distinct.
-    """
-    if len(a) > len(b):
-        a, b = b, a
-    if len(a) == 0 or len(b) == 0:
-        return 0
-    idx = np.searchsorted(b, a)
-    idx_clipped = np.minimum(idx, len(b) - 1)
-    return int(np.count_nonzero(b[idx_clipped] == a))
-
-
-_PACK_SHIFT = 6  # 64-bit words, mirroring BSR PACK_WIDTH (reference util.hpp:21-29)
-
-
-def pack_bitset(values: np.ndarray, n_words: int) -> np.ndarray:
-    """Pack sorted distinct non-negative ints into a uint64 bitmap of n_words."""
-    out = np.zeros(n_words, dtype=np.uint64)
-    v = np.asarray(values, dtype=np.int64)
-    if v.size:
-        np.bitwise_or.at(out, v >> _PACK_SHIFT, np.uint64(1) << (v & 63).astype(np.uint64))
-    return out
-
-
-def bitset_words(max_value: int) -> int:
-    return (int(max_value) >> _PACK_SHIFT) + 1
-
-
-def bitset_membership_count(bitset: np.ndarray, probes: np.ndarray) -> int:
-    """Count how many of `probes` are set in the packed bitmap (hub path)."""
-    p = np.asarray(probes, dtype=np.int64)
-    if p.size == 0:
-        return 0
-    words = bitset[p >> _PACK_SHIFT]
-    mask = np.uint64(1) << (p & 63).astype(np.uint64)
-    return int(np.count_nonzero(words & mask))
-
-
-def membership_counts_grouped(hub_ids, probe_lists, hub_sets: dict) -> np.ndarray:
-    """counts[i] = |probe_lists[i] ∩ hub_sets[hub_ids[i]]| — the hub/skew
-    kernel of the blocked triangle count (Bisson dual path, reference
-    Bisson/tc.cu:36-87: big rows probed via broadcast bitmaps).
-
-    Vectorized per DISTINCT hub: all rows sharing a hub are probed with one
-    concatenated numpy call. Per hub the probe strategy adapts:
-    - packed-bitset membership when the hub's value span is dense enough
-      (≤ 4 words per element — the BSR economy test, reference
-      porder.cpp:295-351),
-    - searchsorted (galloping) otherwise — memory stays O(|hub set|).
-    """
-    n = len(hub_ids)
-    hub_ids = np.asarray(hub_ids, dtype=np.int64)
-    flat, rows, _ = _concat_ragged(probe_lists)
-    return membership_counts_flat(hub_ids, flat, rows, hub_sets)
-
-
-def membership_counts_flat(
-    hub_ids: np.ndarray, flat: np.ndarray, rows: np.ndarray, hub_sets: dict
-) -> np.ndarray:
-    """Flat-layout core of membership_counts_grouped: probe values arrive as
-    one concatenated array + row ids (exactly the Arrow list buffers, so the
-    caller can pass them zero-copy — no per-row materialization).
-
-    One stable argsort groups the probe stream into contiguous per-hub
-    segments, so total work is O(F log F + Σ probes + Σ pack) regardless of
-    how many distinct hubs a task sees (a per-hub boolean scan of the whole
-    stream would be quadratic — the exact straggler this kernel exists to
-    remove)."""
-    n = len(hub_ids)
-    out = np.zeros(n, dtype=np.int64)
-    if n == 0 or flat.size == 0:
-        return out
-    hub_ids = np.asarray(hub_ids, dtype=np.int64)
-    flat = np.asarray(flat, dtype=np.int64)
-    rows = np.asarray(rows, dtype=np.int64)
-    hub_of_flat = hub_ids[rows]
-    order = np.argsort(hub_of_flat, kind="stable")
-    f_sorted = flat[order]
-    r_sorted = rows[order]
-    h_sorted = hub_of_flat[order]
-    uniq, seg_starts = np.unique(h_sorted, return_index=True)
-    seg_ends = np.append(seg_starts[1:], len(h_sorted))
-    hit_rows: list[np.ndarray] = []
-    for h, s, e in zip(uniq, seg_starts, seg_ends):
-        hs = hub_sets.get(int(h))
-        if hs is None or len(hs) == 0:
-            continue
-        hs = np.asarray(hs, dtype=np.int64)
-        probes = f_sorted[s:e]
-        row_of = r_sorted[s:e]
-        lo, hi = int(hs[0]), int(hs[-1])
-        span_words = ((hi - lo) >> _PACK_SHIFT) + 1
-        if span_words <= 4 * hs.size:
-            bs = pack_bitset(hs - lo, span_words)
-            in_range = (probes >= lo) & (probes <= hi)
-            p = probes[in_range] - lo
-            words = bs[p >> _PACK_SHIFT]
-            mask = np.uint64(1) << (p & 63).astype(np.uint64)
-            hits = (words & mask) != 0
-            hit_rows.append(row_of[in_range][hits])
-        else:
-            idx = np.searchsorted(hs, probes)
-            idx_c = np.minimum(idx, hs.size - 1)
-            hits = hs[idx_c] == probes
-            hit_rows.append(row_of[hits])
-    if hit_rows:
-        # one buffered bincount over all hits (np.add.at is unbuffered and
-        # ~10x slower at these volumes)
-        all_hits = np.concatenate(hit_rows)
-        out += np.bincount(all_hits, minlength=n).astype(np.int64)
-    return out
-
-
-# Heuristic threshold: use galloping when one list is this many times longer.
-GALLOP_SKEW_RATIO = 32
-
-
-def intersect_count_adaptive(a: np.ndarray, b: np.ndarray) -> int:
-    """Per-pair kernel choice by skew, mirroring the reference's per-row
-    heuristic (Bisson small-row fallback `tc.cu:36-87`)."""
-    la, lb = len(a), len(b)
-    if la == 0 or lb == 0:
-        return 0
-    if la * GALLOP_SKEW_RATIO < lb or lb * GALLOP_SKEW_RATIO < la:
-        return intersect_count_galloping(a, b)
-    return int(np.intersect1d(a, b, assume_unique=True).size)

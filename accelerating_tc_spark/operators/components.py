@@ -5,16 +5,17 @@ exact component ids at the fixpoint (the id of each component's smallest
 vertex), matching the north rule's "component IDs exact".
 
 Round complexity is the 100 TB concern: plain propagation needs
-O(diameter) supersteps — hundreds on web-graph long tails. The default
-``jump`` algorithm adds POINTER JUMPING each round (label <- label of
-label, the shortcutting of Kiveris et al., "Connected Components in
-MapReduce and Beyond", SoCC'14 — public result): labels chase their own
-chains, collapsing rounds to O(log n) on paths. Invariants: a label is
-always a vertex id inside its own component and only decreases, so the
-fixpoint is unchanged — both algorithms return byte-identical results.
+O(diameter) supersteps — hundreds on web-graph long tails. Every round
+therefore also POINTER JUMPS (label <- label of label, the shortcutting of
+Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC'14 —
+public result): labels chase their own chains, collapsing rounds to
+O(log n) on paths. Invariants: a label is always a vertex id inside its own
+component and only decreases, so the fixpoint is that of plain
+propagation.
 
-Every round is one shuffle-join + one groupBy (+ one label self-join for
-jump) on the same vertex key; state checkpoints via the superstep spine.
+The loop body is the shared `supersteps.min_label_fixpoint` (also run by
+both SCC phases) over the symmetrized edges; state checkpoints via the
+superstep spine.
 """
 
 from __future__ import annotations
@@ -30,103 +31,37 @@ def connected_components_run(
     canonical: DataFrame,
     max_iterations: int = 100,
     checkpoint_dir: str | None = None,
-    algorithm: str = "jump",
 ) -> supersteps.SuperstepRun:
-    """Full run record (state + per-round metrics). algorithm: "jump"
-    (min-propagation + pointer jumping, O(log n)-ish rounds, default) or
-    "minlabel" (plain propagation, O(diameter) rounds — the naive baseline
-    kept for round-count comparison in bench)."""
-    if algorithm not in ("jump", "minlabel"):
-        raise ValueError(f"unknown algorithm: {algorithm}")
-    n_part = spark.sparkContext.defaultParallelism
-    # Broadcast-state plan decision (r7, shared with labelprop): min-label
-    # aggregation is order-insensitive integers, so on broadcastable-state
-    # graphs the relation is partitioned by dst (the per-round grouping
-    # key) and the state ships as an explicit broadcast — a round then runs
-    # with ZERO exchanges. Above the cap: classic plan, relation
-    # partitioned by src, only the state table shuffles per round.
+    """Full run record (state (vertex, component) + per-round metrics)."""
+    # Broadcast-state plan decision (r7, shared with labelprop and k-core):
+    # above the 32·|E| gate the classic shuffled-state plan runs.
     bcast_state = supersteps.broadcast_state_ok(canonical.count())
-    sym_raw = prep.symmetrize(canonical)
-    verts = sym_raw.select(F.col("src").alias("vertex")).distinct()
-    # self-loops folded into the cached relation make min(own, nbr-min)
-    # a SINGLE aggregate — the old separate keep-own-component left join
-    # was one of three per-round joins, for the same fixpoint
-    sym = (
-        sym_raw.union(verts.select(F.col("vertex").alias("src"), F.col("vertex").alias("dst")))
-        .repartition(n_part, "dst" if bcast_state else "src")
-        .cache()
-    )
+    sym = prep.symmetrize(canonical)
+    verts = sym.select(F.col("src").alias("vertex")).distinct()
+
     # Round 1 from the identity labeling is exactly "min over neighbors ∪
     # self" (and pointer jumping through the identity state is the
     # identity), so it folds into init as ONE aggregate over the cached
-    # relation (r7): the first superstep's join disappears for both
-    # algorithms, the fixpoint and every later state are unchanged, and
-    # only the reported iteration count shrinks by one. The grouping side
-    # matches the partitioning key (symmetry + self-loops make
-    # min-over-neighbors∪self the same either way), so init is
-    # exchange-free under both plans.
-    init = (
-        sym.groupBy(F.col("dst").alias("vertex")).agg(F.min("src").alias("component"))
-        if bcast_state
-        else sym.groupBy(F.col("src").alias("vertex")).agg(
-            F.min("dst").alias("component")
-        )
-    )
+    # relation (r7): the first superstep's join disappears, the fixpoint
+    # and every later state are unchanged, and only the reported iteration
+    # count shrinks by one. The grouping side matches the partitioning key
+    # (symmetry + self-loops make min-over-neighbors∪self the same either
+    # way), so init is exchange-free under both plans.
+    key, nbr = ("dst", "src") if bcast_state else ("src", "dst")
 
-    def step(state: DataFrame, i: int) -> DataFrame:
-        cand = (
-            sym.join(
-                F.broadcast(state) if bcast_state else state,
-                sym["src"] == state["vertex"],
-            )
-            .select(F.col("dst").alias("vertex"), F.col("component").alias("nbr_comp"))
-            .groupBy("vertex")
-            .agg(F.min("nbr_comp").alias("component"))
-        )
-        if algorithm == "minlabel":
-            return cand
-        # pointer jump: component <- component(component). Labels are vertex
-        # ids of the same graph, monotone non-increasing, so the lookup is a
-        # plain self-join on the label table.
-        lbl = state.select(
-            F.col("vertex").alias("component"), F.col("component").alias("jumped")
-        )
-        return cand.join(
-            F.broadcast(lbl) if bcast_state else lbl, "component", "left"
-        ).select(
-            "vertex", F.least("component", F.coalesce("jumped", "component")).alias("component")
-        )
+    def init(rel: DataFrame) -> DataFrame:
+        return rel.groupBy(F.col(key).alias("vertex")).agg(F.min(nbr).alias("component"))
 
-    # Convergence via the label-sum invariant instead of the old
-    # join-old-with-new changed-row count (r7): labels only ever decrease,
-    # so the state is a fixpoint iff sum(component) is unchanged — one tiny
-    # aggregate job per round over the just-materialized state replaces a
-    # two-sided join + count. Decimal(38) sum is exact for any long ids.
-    prev_sum: list = [None]
-
-    def _comp_sum(df: DataFrame):
-        s = df.agg(F.sum(F.col("component").cast("decimal(38,0)")).alias("s")).first()["s"]
-        return s if s is not None else 0
-
-    def delta_fn(old: DataFrame, new: DataFrame) -> float:
-        if prev_sum[0] is None:
-            prev_sum[0] = _comp_sum(old)
-        s = _comp_sum(new)
-        d = float(prev_sum[0] - s)
-        prev_sum[0] = s
-        return d
-
-    run = supersteps.iterate(
+    return supersteps.min_label_fixpoint(
         spark,
+        sym,
+        verts,
         init,
-        step,
-        max_iterations=max_iterations,
-        delta_fn=delta_fn,
-        tolerance=0.0,
+        bcast_state,
+        max_iterations,
+        label="component",
         checkpoint_dir=checkpoint_dir,
-        on_nonconverged="raise",  # exact-semantics operator
     )
-    return supersteps.finalize(run, sym)
 
 
 def connected_components(
@@ -134,12 +69,9 @@ def connected_components(
     canonical: DataFrame,
     max_iterations: int = 100,
     checkpoint_dir: str | None = None,
-    algorithm: str = "jump",
 ) -> DataFrame:
     """(vertex, component) with component = min vertex id in the component."""
-    return connected_components_run(
-        spark, canonical, max_iterations, checkpoint_dir, algorithm
-    ).state
+    return connected_components_run(spark, canonical, max_iterations, checkpoint_dir).state
 
 
 def component_sizes(spark: SparkSession, canonical: DataFrame, **kwargs) -> DataFrame:

@@ -29,7 +29,7 @@ A-direction.cpp:266-285).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import prep, supersteps
@@ -60,16 +60,9 @@ def core_numbers(
     canonical: DataFrame,
     max_iterations: int = 500,
     checkpoint_dir: str | None = None,
-    impl: str = "aggregate",
-    fixed_rounds: int | None = None,
 ) -> DataFrame:
-    """(vertex, core) — exact core number per vertex at the h-index fixpoint.
-
-    impl="aggregate" (default): hash-aggregate rounds (module docstring).
-    impl="window": the superseded per-round row_number sort window, kept
-    only as the same-session A/B baseline for the bench.
-    fixed_rounds: run exactly N materialized rounds with no convergence
-    check (bench mode — per-round cost measurement; NOT a fixpoint).
+    """(vertex, core) — exact core number per vertex at the h-index fixpoint,
+    one hash-aggregate round per superstep (module docstring).
     max_iterations defaults high (500): rounds are flat-cost (superstep
     hard cuts bound the lineage chain) and deep peel chains legitimately
     need hundreds of rounds — one round per remaining peel level."""
@@ -89,23 +82,7 @@ def core_numbers(
     def _st(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if bcast_state else df
 
-    w = Window.partitionBy("vertex").orderBy(F.desc("nbr_core"))
-
-    def step_window(state: DataFrame, i: int) -> DataFrame:
-        nbr = sym.join(state, sym["src"] == state["vertex"]).select(
-            F.col("dst").alias("vertex"), F.col("core").alias("nbr_core")
-        )
-        hidx = (
-            nbr.withColumn("rn", F.row_number().over(w))
-            .select("vertex", F.least(F.col("rn").cast("long"), F.col("nbr_core")).alias("h"))
-            .groupBy("vertex")
-            .agg(F.max("h").alias("new_core"))
-        )
-        return state.join(hidx, "vertex", "left").select(
-            "vertex", F.least("core", F.coalesce("new_core", F.lit(0))).alias("core")
-        )
-
-    def step_aggregate(state: DataFrame, i: int) -> DataFrame:
+    def step(state: DataFrame, i: int) -> DataFrame:
         st_src = state.select(F.col("vertex").alias("src"), F.col("core").alias("src_core"))
         st_dst = state.select(F.col("vertex").alias("dst"), F.col("core").alias("dst_core"))
         capped = (
@@ -126,45 +103,13 @@ def core_numbers(
             "vertex", F.least("core", F.coalesce("new_core", F.lit(0))).alias("core")
         )
 
-    step = step_aggregate if impl == "aggregate" else step_window
-
-    # core estimates only ever decrease, so the state is a fixpoint iff
-    # sum(core) is unchanged — the same memoized monotone-sum probe as
-    # connected components (r7): one tiny aggregate replaces a per-round
-    # two-sided join + count. Decimal(38) is exact for any long cores.
-    prev_sum: list = [None]
-
-    def _core_sum(df: DataFrame):
-        s = df.agg(F.sum(F.col("core").cast("decimal(38,0)")).alias("s")).first()["s"]
-        return s if s is not None else 0
-
-    def delta_fn(old: DataFrame, new: DataFrame) -> float:
-        if prev_sum[0] is None:
-            prev_sum[0] = _core_sum(old)
-        s = _core_sum(new)
-        d = float(prev_sum[0] - s)
-        prev_sum[0] = s
-        return d
-
-    if fixed_rounds is not None:
-        run = supersteps.iterate(
-            spark,
-            init,
-            step,
-            max_iterations=fixed_rounds,
-            delta_fn=None,  # no convergence metering: pure round-cost mode
-            checkpoint_every=1,  # materialize every round so walls are real
-            checkpoint_dir=checkpoint_dir,
-            on_nonconverged="ignore",
-        )
-        return run.state
-
+    # core estimates only ever decrease: the shared monotone-sum probe
     run = supersteps.iterate(
         spark,
         init,
         step,
         max_iterations=max_iterations,
-        delta_fn=delta_fn,
+        delta_fn=supersteps.monotone_sum_probe("core"),
         tolerance=0.0,
         checkpoint_dir=checkpoint_dir,
         on_nonconverged="raise",  # exact-semantics operator

@@ -19,7 +19,8 @@ Each outer round, on the still-unassigned subgraph:
    u ->* v``. Min-label propagation along edge direction, accelerated by
    POINTER JUMPING — valid here because the invariant "label(v) reaches v"
    is preserved under label(label(v)) (reachability composes), collapsing
-   rounds to O(log n)-ish exactly as in the undirected CC.
+   rounds to O(log n)-ish — the same loop the undirected CC runs
+   (supersteps.min_label_fixpoint).
 3. BACKWARD CONFIRMATION inside each color class: the class of root r
    (color == r == class minimum) contains SCC(r), and every v -> r path
    stays inside the class, so ``m(v) = min class-internal vertex reachable
@@ -45,82 +46,29 @@ from pyspark.sql import functions as F
 from . import supersteps
 
 
-def _min_label_fixpoint(
+def _reachers(
     spark: SparkSession,
     edges: DataFrame,
     verts: DataFrame,
     max_iterations: int,
 ) -> DataFrame:
     """(vertex, label) with label = min vertex having a directed path TO
-    vertex along `edges` (every vertex reaches itself). Min-propagation with
-    pointer jumping; raises if max_iterations is hit before the fixpoint."""
-    n_part = spark.sparkContext.defaultParallelism
-    # fold self-loops in so min(own, incoming-min) is a single aggregate
-    # (the components.py trick) and edge-less vertices stay in the state.
-    # Broadcast-state plan (r7, as in components): integer min aggregates
-    # are order-insensitive, so on broadcastable-state graphs the relation
-    # is partitioned by dst (the grouping key) and the per-round state
-    # ships as explicit broadcasts — a round runs exchange-free. The
-    # cache-warming count doubles as the plan gate.
+    vertex along `edges` (every vertex reaches itself): the shared
+    min-label + pointer-jump fixpoint, started from the identity labeling.
+    label(v) reaches v and label(label(v)) reaches label(v), so the jumped
+    value is still a reacher of v — the fixpoint is unchanged, rounds
+    collapse. Raises if max_iterations is hit before the fixpoint."""
     # the state is exactly |verts| rows, and callers pass verts already
-    # materialized (cutter.cut) — gate the plan on it directly
+    # materialized (cutter.cut) — gate the broadcast-state plan on it
     bcast_state = 24 * verts.count() <= supersteps.STATE_BROADCAST_MAX_BYTES
-    rel = (
-        edges.union(
-            verts.select(F.col("vertex").alias("src"), F.col("vertex").alias("dst"))
-        )
-        .repartition(n_part, "dst" if bcast_state else "src")
-        .cache()
-    )
-    init = verts.select("vertex", F.col("vertex").alias("label"))
-
-    def step(state: DataFrame, i: int) -> DataFrame:
-        cand = (
-            rel.join(
-                F.broadcast(state) if bcast_state else state,
-                rel["src"] == state["vertex"],
-            )
-            .select(F.col("dst").alias("vertex"), F.col("label").alias("nbr_label"))
-            .groupBy("vertex")
-            .agg(F.min("nbr_label").alias("label"))
-        )
-        # pointer jump: label <- min(label, label(label)). label(v) reaches v
-        # and label(label(v)) reaches label(v), so the jumped value is still
-        # a reacher of v — the fixpoint is unchanged, rounds collapse.
-        lbl = state.select(F.col("vertex").alias("label"), F.col("label").alias("jumped"))
-        return cand.join(
-            F.broadcast(lbl) if bcast_state else lbl, "label", "left"
-        ).select(
-            "vertex", F.least("label", F.coalesce("jumped", "label")).alias("label")
-        )
-
-    # monotone-sum convergence probe (r7, as in components/kcore): labels
-    # only decrease, so fixpoint iff sum(label) is unchanged — one tiny
-    # aggregate per round instead of a two-sided join + count.
-    prev_sum: list = [None]
-
-    def _label_sum(df: DataFrame):
-        s = df.agg(F.sum(F.col("label").cast("decimal(38,0)")).alias("s")).first()["s"]
-        return s if s is not None else 0
-
-    def delta_fn(old: DataFrame, new: DataFrame) -> float:
-        if prev_sum[0] is None:
-            prev_sum[0] = _label_sum(old)
-        s = _label_sum(new)
-        d = float(prev_sum[0] - s)
-        prev_sum[0] = s
-        return d
-
-    run = supersteps.iterate(
+    return supersteps.min_label_fixpoint(
         spark,
-        init,
-        step,
-        max_iterations=max_iterations,
-        delta_fn=delta_fn,
-        tolerance=0.0,
-        on_nonconverged="raise",  # exact-semantics operator
-    )
-    return supersteps.finalize(run, rel).state
+        edges,
+        verts,
+        lambda rel: verts.select("vertex", F.col("vertex").alias("label")),
+        bcast_state,
+        max_iterations,
+    ).state
 
 
 def strongly_connected_components(
@@ -172,7 +120,7 @@ def strongly_connected_components(
                 break
 
             # --- 2. forward coloring: color(v) = min vertex reaching v ---
-            colors = _min_label_fixpoint(spark, e, verts, max_inner)
+            colors = _reachers(spark, e, verts, max_inner)
 
             # --- 3. backward confirmation inside each color class ---
             c_src = colors.select(F.col("vertex").alias("src"), F.col("label").alias("c_src"))
@@ -185,7 +133,7 @@ def strongly_connected_components(
                 # propagates against edge direction
                 .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
             )
-            m = _min_label_fixpoint(spark, class_rev, verts, max_inner)
+            m = _reachers(spark, class_rev, verts, max_inner)
 
             # v in SCC(root) iff it reaches its class root within the class:
             # the root is the class minimum, so m(v) == color(v) decides it

@@ -3,7 +3,9 @@
 Generalizes the reference's A-direction peeling loop (frontier rounds of
 degree updates, edge_directing/A-direction.cpp:84-146; SURVEY.md G2) into a
 reusable `iterate()` that PageRank / connected components / label
-propagation / k-core all share.
+propagation / k-core / SCC all share. Two loop bodies live here too:
+`min_label_fixpoint` (CC and both SCC phases) and `monotone_sum_probe`
+(the convergence probe of CC, SCC and k-core).
 
 Scale/correctness posture:
 - every superstep's state is persisted (parquet dir per iteration — the
@@ -349,3 +351,91 @@ def iterate(
         metrics=metrics,
         state_is_cut=state_cut,
     )
+
+
+def monotone_sum_probe(col: str) -> Callable[[DataFrame, DataFrame], float]:
+    """Convergence `delta_fn` for a state column that only ever decreases
+    (min labels, h-index core estimates): the state is a fixpoint iff
+    sum(col) is unchanged, so one tiny aggregate per round over the
+    just-materialized state replaces a two-sided join + changed-row count
+    (r7). The previous round's sum is memoized; decimal(38) is exact for
+    any long values."""
+    prev_sum: list = [None]
+
+    def col_sum(df: DataFrame):
+        s = df.agg(F.sum(F.col(col).cast("decimal(38,0)")).alias("s")).first()["s"]
+        return s if s is not None else 0
+
+    def delta_fn(old: DataFrame, new: DataFrame) -> float:
+        if prev_sum[0] is None:
+            prev_sum[0] = col_sum(old)
+        s = col_sum(new)
+        d = float(prev_sum[0] - s)
+        prev_sum[0] = s
+        return d
+
+    return delta_fn
+
+
+def min_label_fixpoint(
+    spark: SparkSession,
+    edges: DataFrame,
+    verts: DataFrame,
+    init: Callable[[DataFrame], DataFrame],
+    bcast_state: bool,
+    max_iterations: int,
+    label: str = "label",
+    checkpoint_dir: str | None = None,
+) -> SuperstepRun:
+    """(vertex, label) at the fixpoint of label(v) <- min(label(v),
+    min over edges u -> v of label(u)), accelerated by POINTER JUMPING
+    (label <- label(label), the shortcutting of Kiveris et al., SoCC'14):
+    labels chase their own chains, collapsing rounds to O(log n) on paths.
+    Shared by connected components (symmetric edges) and both SCC phases
+    (directed edges); the jump is valid for both because a label is always
+    a vertex that reaches v and only decreases.
+
+    Each caller keeps its own plan decision and initial state:
+    - `bcast_state`: integer min aggregates are order-insensitive, so on
+      broadcastable-state graphs the loop relation is partitioned by dst
+      (the per-round grouping key) and the state ships as explicit
+      broadcasts — a round runs with ZERO exchanges. Otherwise the classic
+      plan: relation partitioned by src, only the state shuffles.
+    - `init(rel)` builds round 0's state from the cached loop relation.
+    Self-loops for every vertex are folded into the relation, so min(own,
+    incoming-min) is a single aggregate and edge-less vertices stay in the
+    state. Raises if max_iterations is hit before the fixpoint."""
+    rel = (
+        edges.union(
+            verts.select(F.col("vertex").alias("src"), F.col("vertex").alias("dst"))
+        )
+        .repartition(spark.sparkContext.defaultParallelism, "dst" if bcast_state else "src")
+        .cache()
+    )
+
+    def _st(df: DataFrame) -> DataFrame:
+        return F.broadcast(df) if bcast_state else df
+
+    def step(state: DataFrame, i: int) -> DataFrame:
+        cand = (
+            rel.join(_st(state), rel["src"] == state["vertex"])
+            .select(F.col("dst").alias("vertex"), F.col(label).alias("nbr_label"))
+            .groupBy("vertex")
+            .agg(F.min("nbr_label").alias(label))
+        )
+        jumped = state.select(F.col("vertex").alias(label), F.col(label).alias("jumped"))
+        return cand.join(_st(jumped), label, "left").select(
+            "vertex", F.least(label, F.coalesce("jumped", label)).alias(label)
+        )
+
+    run = iterate(
+        spark,
+        init(rel),
+        step,
+        max_iterations=max_iterations,
+        delta_fn=monotone_sum_probe(label),
+        tolerance=0.0,
+        checkpoint_dir=checkpoint_dir,
+        on_nonconverged="raise",  # exact-semantics operator
+    )
+    return finalize(run, rel)

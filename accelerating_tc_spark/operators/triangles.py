@@ -1,4 +1,5 @@
-"""Exact triangle counting — four physical strategies over one logical plan.
+"""Exact triangle counting — one logical plan, three wedge-join strategies
+plus the blocked operator with two physical routes.
 
 The logical plan everywhere: orient edges into a DAG (low-degree -> high-degree,
 prep.orient_by_degree), then for each oriented edge (u, v) count
@@ -11,9 +12,16 @@ reference's single logical join realized by many kernels (SURVEY.md §2.3):
   F.array_intersect — stays fully JVM-side / whole-stage codegen.
 - `triangle_count_kernel`      : adjacency join + Arrow-batched numpy merge
   kernel (reference J1/J2, org_triangle_count.cpp:56-86 + Hu/tc.cu:69-201).
-- `triangle_count_blocked`     : bounded-shuffle block-pair cogroup with
+- `triangle_count_blocked`     : the at-scale operator, two routes chosen at
+  runtime — a zero-shuffle broadcast CSR when the oriented adjacency fits
+  the per-worker budget, else the bounded-shuffle block-pair cogroup with
   per-shard CSR built in numpy (reference J6, TriCore
   tricore/src/tricount_gpu.cu:337-408) — the 100 TB path.
+
+The degree orientation bounds every out-adjacency by O(sqrt m), so neither
+route needs a separate hub path: a Bisson-style broadcast-probe hub route
+lost both warmed interleaved A/Bs against the plain cogroup (BENCH.md §5h,
+§8b).
 
 All variants return a 1-row DataFrame with column `triangles: long`.
 """
@@ -29,17 +37,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ..functions.csr import CsrShard, intersect_count_csr
-from ..functions.intersect import (
-    intersect_count_pairs,
-    membership_counts_flat,
-    membership_counts_grouped,
-)
-from ..plans.blocking import (
-    auto_n_blocks,
-    replicate_adjacency,
-    tag_edge_blocks,
-    workload_balanced,
-)
+from ..functions.intersect import intersect_count_pairs
+from ..plans.blocking import auto_n_blocks, replicate_adjacency, tag_edge_blocks
 from . import prep
 
 
@@ -102,18 +101,6 @@ def triangle_count_kernel(oriented: DataFrame) -> DataFrame:
 _PARTIAL_SCHEMA = StructType(
     [StructField("triangles", LongType()), StructField("task_s", DoubleType())]
 )
-
-# Broadcast-size cap for hub adjacency: total out-neighbor entries shipped to
-# every executor (int64 each; 2^22 ≈ 32 MiB). Hubs beyond the cap (rarest
-# case: thousands of mega-hubs) fall back to the cogroup path.
-_MAX_HUB_ENTRIES = 1 << 22
-# Driver-collect row cap for hub candidates, enforced IN the query via
-# orderBy(desc(degree)).limit() (a distributed TakeOrdered — no full sort,
-# no unbounded collect): a hostile/low hub_threshold selects the whole
-# vertex set, and capping only after .collect() would OOM the driver
-# before the entry budget ever ran. 4096 rows ≫ any real mega-hub count;
-# each row's adjacency is orientation-bounded (O(sqrt m)).
-_MAX_HUB_ROWS = 4096
 
 # Broadcast-route budget (bytes of int64 adjacency entries): when the WHOLE
 # oriented adjacency fits, it is cheaper to ship it once to every worker
@@ -217,284 +204,73 @@ def _broadcast_partials(oriented: DataFrame) -> DataFrame:
 def _blocked_partials(
     oriented: DataFrame,
     n_blocks: int | None = None,
-    hub_threshold: int | None = None,
-    deg: DataFrame | None = None,
     allow_broadcast: bool = True,
-) -> tuple[DataFrame, list[DataFrame], int]:
-    """Skew-aware blocked plan: per-task partial counts (triangles, task_s).
+) -> tuple[DataFrame, list, int]:
+    """Blocked plan: per-task partial counts (triangles, task_s).
 
-    Returns (partials, cached_relations_to_unpersist, chosen_n_blocks).
-    n_blocks=None auto-derives B from cores + adjacency size
-    (plans.blocking.auto_n_blocks, the `cal_part_num` analog); an explicit
-    int pins it (A/B tests, cross-round comparability) and also pins the
-    cogroup route. With n_blocks=None, hub route off, and the adjacency
-    small enough for the per-worker broadcast budget, the zero-shuffle
-    broadcast-CSR route is taken instead (reported as n_blocks=1; see
-    _broadcast_partials; allow_broadcast=False opts out — used by
-    blocked_task_stats so skew diagnostics always describe the cogroup
-    plan).
+    Returns (partials, broadcasts_to_unpersist, chosen_n_blocks). Two
+    physical routes:
 
-    Two physical routes, split by TOTAL degree (the number of edges that
-    reference a vertex's adjacency — in-degree is NOT bounded by the degree
-    orientation, so a web-scale hub concentrates wedge work into the few
-    block pairs that own it):
-
-    - **hub route** (reference Bisson big-row dual path, Bisson/tc.cu:36-87):
-      hubs' out-neighbor sets (orientation-bounded, so small even for
-      billion-degree hubs) are broadcast; each hub edge ships only the
-      NON-hub side's adjacency and probes it against the broadcast set via
-      bitset membership or galloping (functions/intersect.py
-      membership_counts_grouped). Rows are spread round-robin — no key, no
-      skew, perfectly even tasks.
-    - **cogroup route** for everything else: vertices hash into n_blocks,
-      each cogrouped task gets one (bu, bv) edge block plus exactly the two
+    - **broadcast CSR** (_broadcast_partials): taken when n_blocks=None and
+      16·|E| bytes fit _TC_BROADCAST_MAX_BYTES; reported as n_blocks=1.
+      allow_broadcast=False opts out — used by blocked_task_stats so skew
+      diagnostics always describe the cogroup plan.
+    - **cogroup** for everything else: vertices hash into n_blocks, each
+      cogrouped task gets one (bu, bv) edge block plus exactly the two
       adjacency shards it needs, rebuilds a zero-copy Arrow CSR and runs the
       batch merge kernel. Shuffle volume |edges| + 2·n_blocks·|adj| —
       independent of wedge count (reference TriCore pair loop,
-      tricount_gpu.cu:337-408; n_blocks is the `cal_part_num` analog).
+      tricount_gpu.cu:337-408). n_blocks=None auto-derives B from cores +
+      adjacency size (plans.blocking.auto_n_blocks, the `cal_part_num`
+      analog); an explicit int pins it (A/B tests, cross-round
+      comparability) and also pins this route.
 
-    hub_threshold=None (the DEFAULT) disables the hub route: with the
-    degree orientation in force, every out-adjacency is arboricity-bounded
-    (O(sqrt m)), so the hash-blocked cogroup has no wedge-work straggler
-    even under a planted mega-hub — a warmed interleaved A/B on the
-    V=200k/E=2M Zipf + mega-hub fixture measures the pure cogroup FASTER
-    than the routed plan in every round (BENCH.md §5h; the r2 table that
-    showed the opposite was cold-run warm-up-order bias). Pass an int
-    threshold to route vertices of that total degree through the
-    broadcast-probe path — the escape hatch for hubs whose per-block-row
-    edge mass threatens task memory at cluster scale (auto-B already
-    grows B for shard memory, so this is rare by construction).
+    Skew needs no third route: with the degree orientation in force every
+    out-adjacency is arboricity-bounded (O(sqrt m)), so the hash-blocked
+    cogroup has no wedge-work straggler even under a planted mega-hub
+    (BENCH.md §5h, §8b). Only |E| drives the decision, and callers' cached
+    `oriented` makes the count ~free.
     """
-    spark = oriented.sparkSession
-    if hub_threshold is None:
-        # hub route off (the default, see docstring): degree statistics are
-        # not needed at all — |E| alone drives auto-B and the broadcast
-        # decision, and callers' cached `oriented` makes count() ~free
-        # (r7: removes the explode+groupBy degree job the old stats pass
-        # paid on every call).
-        n_edges = oriented.count()
-        if (
-            allow_broadcast
-            and n_blocks is None
-            and 16 * n_edges <= _TC_BROADCAST_MAX_BYTES
-        ):
-            partials, bc = _broadcast_partials(oriented)
-            return partials, [bc], 1
-        if n_blocks is None:
-            n_blocks = auto_n_blocks(spark.sparkContext.defaultParallelism, n_edges)
-        partials = _cogroup_partials(
-            tag_edge_blocks(oriented, n_blocks),
-            replicate_adjacency(prep.adjacency(oriented), n_blocks),
-        )
-        return partials, [], n_blocks
-
-    if deg is None:
-        # callers that already computed degrees for the orientation should
-        # pass them in — total degree is orientation-invariant
-        deg = (
-            oriented.select(F.explode(F.array("src", "dst")).alias("vertex"))
-            .groupBy("vertex")
-            .agg(F.count(F.lit(1)).alias("degree"))
-        )
-    stats = deg.agg(
-        F.sum("degree").alias("two_m"), F.max("degree").alias("max_deg")
-    ).first()
+    n_edges = oriented.count()
+    # the budget's `> 0` keeps the documented kill switch exact: with a 0
+    # budget an empty graph (16·0 <= 0) must still take the cogroup route
+    if (
+        allow_broadcast
+        and n_blocks is None
+        and 0 < _TC_BROADCAST_MAX_BYTES
+        and 16 * n_edges <= _TC_BROADCAST_MAX_BYTES
+    ):
+        partials, bc = _broadcast_partials(oriented)
+        return partials, [bc], 1
     if n_blocks is None:
-        n_blocks = auto_n_blocks(
-            spark.sparkContext.defaultParallelism, int(stats["two_m"] or 0) // 2
-        )
-
-    if stats["max_deg"] is None or stats["max_deg"] < hub_threshold:
-        # no hubs: pure bounded-shuffle cogroup, zero hub-path overhead
-        # (no adjacency caching, no broadcast, no edge flagging)
-        partials = _cogroup_partials(
-            tag_edge_blocks(oriented, n_blocks),
-            replicate_adjacency(prep.adjacency(oriented), n_blocks),
-        )
-        return partials, [], n_blocks
-
-    adj = prep.adjacency(oriented).cache()
-    # worst hubs first (they carry the skew), row count bounded by
-    # construction BEFORE anything reaches the driver
-    hub_rows = (
-        deg.where(F.col("degree") >= F.lit(hub_threshold))
-        .orderBy(F.desc("degree"), F.asc("vertex"))
-        .limit(_MAX_HUB_ROWS)
-        .withColumnRenamed("vertex", "src")
-        .join(adj, "src", "left")
-        .select("src", "degree", "nbrs")
-        .collect()
+        n_blocks = auto_n_blocks(oriented.sparkSession.sparkContext.defaultParallelism, n_edges)
+    partials = _cogroup_partials(
+        tag_edge_blocks(oriented, n_blocks),
+        replicate_adjacency(prep.adjacency(oriented), n_blocks),
     )
-    hub_rows.sort(key=lambda r: (-r["degree"], r["src"]))
-    hub_sets: dict[int, np.ndarray] = {}
-    budget = _MAX_HUB_ENTRIES
-    for r in hub_rows:
-        nbrs = r["nbrs"] or []
-        if len(nbrs) > budget and hub_sets:
-            break
-        hub_sets[int(r["src"])] = np.asarray(nbrs, dtype=np.int64)
-        budget -= len(nbrs)
-
-    if not hub_sets:
-        partials = _cogroup_partials(
-            tag_edge_blocks(oriented, n_blocks), replicate_adjacency(adj, n_blocks)
-        )
-        return partials, [adj], n_blocks
-
-    bc = spark.sparkContext.broadcast(hub_sets)
-    hub_vdf = spark.createDataFrame(
-        [(int(v),) for v in sorted(hub_sets)], "vertex long"
-    )
-    flagged = (
-        oriented.join(
-            F.broadcast(hub_vdf.select(F.col("vertex").alias("src"), F.lit(True).alias("_hs"))),
-            "src",
-            "left",
-        ).join(
-            F.broadcast(hub_vdf.select(F.col("vertex").alias("dst"), F.lit(True).alias("_hd"))),
-            "dst",
-            "left",
-        )
-    )
-
-    # cogroup route: non-hub edges, shards only for non-hub owners
-    normal = flagged.where(F.col("_hs").isNull() & F.col("_hd").isNull()).select("src", "dst")
-    adj_nonhub = adj.join(
-        F.broadcast(hub_vdf.withColumnRenamed("vertex", "src")), "src", "left_anti"
-    )
-    cogroup_part = _cogroup_partials(
-        tag_edge_blocks(normal, n_blocks), replicate_adjacency(adj_nonhub, n_blocks)
-    )
-
-    # hub route: ship the non-hub side's adjacency only
-    hubbed = flagged.where(F.col("_hs").isNotNull() | F.col("_hd").isNotNull())
-    other = F.when(
-        F.col("_hs").isNotNull() & F.col("_hd").isNull(), F.col("dst")
-    ).when(F.col("_hd").isNotNull() & F.col("_hs").isNull(), F.col("src"))
-    hub_edges = hubbed.select(
-        "src",
-        "dst",
-        F.col("_hs").isNotNull().alias("src_is_hub"),
-        F.col("_hd").isNotNull().alias("dst_is_hub"),
-        other.alias("other"),
-    ).join(
-        adj.select(F.col("src").alias("other"), F.col("nbrs").alias("other_nbrs")),
-        "other",
-        "left",
-    )
-    # equal-WORK spread (plans.blocking.workload_balanced — the Hu equal-work
-    # ranges): per-row probe cost is |other_nbrs| for single-hub rows and
-    # min(|N+(src)|, |N+(dst)|) for hub-hub rows (sizes from the tiny
-    # broadcastable hub-size table; hub-hub rows ship no arrays).
-    hub_szs = spark.createDataFrame(
-        [(int(v), len(a)) for v, a in hub_sets.items()], "vertex long, hsz long"
-    )
-    with_wl = (
-        hub_edges.join(
-            F.broadcast(hub_szs.select(F.col("vertex").alias("src"), F.col("hsz").alias("_sz_s"))),
-            "src",
-            "left",
-        )
-        .join(
-            F.broadcast(hub_szs.select(F.col("vertex").alias("dst"), F.col("hsz").alias("_sz_d"))),
-            "dst",
-            "left",
-        )
-        .withColumn(
-            "workload",
-            F.when(
-                F.col("src_is_hub") & F.col("dst_is_hub"),
-                F.least("_sz_s", "_sz_d"),
-            ).otherwise(F.coalesce(F.size("other_nbrs"), F.lit(0)))
-            + F.lit(1),
-        )
-    )
-    spread = workload_balanced(with_wl, spark.sparkContext.defaultParallelism).drop(
-        "workload", "_sz_s", "_sz_d"
-    )
-
-    def probe(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        sets = bc.value
-        empty = np.empty(0, dtype=np.int64)
-        for rb in batches:
-            t0 = time.time()
-            tbl = pa.Table.from_batches([rb])
-            src = tbl.column("src").to_numpy(zero_copy_only=False)
-            dst = tbl.column("dst").to_numpy(zero_copy_only=False)
-            s_hub = tbl.column("src_is_hub").to_numpy(zero_copy_only=False)
-            d_hub = tbl.column("dst_is_hub").to_numpy(zero_copy_only=False)
-            col = tbl.column("other_nbrs").combine_chunks()
-            # zero-copy flat layout: Arrow list buffers ARE (flat, lens)
-            lens = pc.fill_null(pc.list_value_length(col), 0).to_numpy(
-                zero_copy_only=False
-            )
-            flat = np.asarray(pc.list_flatten(col), dtype=np.int64)
-            rows = np.repeat(np.arange(len(lens), dtype=np.int64), lens)
-            total = 0
-            # single-hub rows: probe shipped adjacency against broadcast set
-            # (hub-hub rows carry no arrays so they contribute nothing here)
-            hub_of = np.where(s_hub, src, dst)
-            total += int(membership_counts_flat(hub_of, flat, rows, sets).sum())
-            both = s_hub & d_hub
-            if both.any():
-                # hub-hub rows: both sides live in the broadcast; probe the
-                # dst sets (referenced, not copied) against the src sets
-                p_lists = [sets.get(int(d), empty) for d in dst[both]]
-                total += int(
-                    membership_counts_grouped(src[both], p_lists, sets).sum()
-                )
-            yield pa.record_batch(
-                {
-                    "triangles": pa.array([total], type=pa.int64()),
-                    "task_s": pa.array([time.time() - t0], type=pa.float64()),
-                }
-            )
-
-    hub_part = spread.select(
-        "src", "dst", "src_is_hub", "dst_is_hub", "other_nbrs"
-    ).mapInArrow(probe, schema=_PARTIAL_SCHEMA)
-    # bc joins the cleanup list: Broadcast.unpersist() drops the executor
-    # copies once the caller's eager action is done (repeated hub-routed
-    # counts previously accumulated one broadcast per call)
-    return cogroup_part.unionAll(hub_part), [adj, bc], n_blocks
+    return partials, [], n_blocks
 
 
-def triangle_count_blocked(
-    oriented: DataFrame,
-    n_blocks: int | None = None,
-    hub_threshold: int | None = None,
-    deg: DataFrame | None = None,
-) -> DataFrame:
-    """Bounded-shuffle, skew-aware block-pair triangle count (the at-scale
-    strategy) — see _blocked_partials for the two-route plan. The 1-row
-    result is materialized eagerly so the plan's internal caches (hub-route
-    adjacency) are released before returning — repeated counts never
-    accumulate cached relations."""
+def triangle_count_blocked(oriented: DataFrame, n_blocks: int | None = None) -> DataFrame:
+    """Bounded-shuffle block-pair triangle count (the at-scale strategy) —
+    see _blocked_partials for the two-route plan. The 1-row result is
+    materialized eagerly so the broadcast-CSR route's executor copies are
+    released before returning — repeated counts never accumulate them."""
     spark = oriented.sparkSession
-    partials, caches, _ = _blocked_partials(oriented, n_blocks, hub_threshold, deg=deg)
+    partials, caches, _ = _blocked_partials(oriented, n_blocks)
     row = partials.agg(F.coalesce(F.sum("triangles"), F.lit(0)).alias("t")).first()
     for c in caches:
         c.unpersist()
     return spark.createDataFrame([(int(row["t"] or 0),)], "triangles long")
 
 
-def blocked_task_stats(
-    oriented: DataFrame,
-    n_blocks: int | None = None,
-    hub_threshold: int | None = None,
-    deg: DataFrame | None = None,
-) -> DataFrame:
-    """Skew diagnostics for the blocked plan: one row with the triangle sum,
-    the (auto-)chosen block count, and max / median / total per-task kernel
-    seconds. Used by bench to show max/median task time before vs after hub
-    routing, and to record the auto-B choice per scaling level."""
+def blocked_task_stats(oriented: DataFrame, n_blocks: int | None = None) -> DataFrame:
+    """Skew diagnostics for the cogroup route: one row with the triangle
+    sum, the (auto-)chosen block count, and max / median / total per-task
+    kernel seconds. Used by bench to show the max/median task time on a
+    skewed graph, and to record the auto-B choice per scaling level."""
     spark = oriented.sparkSession
-    partials, caches, chosen_b = _blocked_partials(
-        oriented, n_blocks, hub_threshold, deg=deg, allow_broadcast=False
-    )
+    partials, _, chosen_b = _blocked_partials(oriented, n_blocks, allow_broadcast=False)
     row = partials.agg(
         F.coalesce(F.sum("triangles"), F.lit(0)).cast("long").alias("triangles"),
         F.count(F.lit(1)).alias("n_tasks"),
@@ -502,8 +278,6 @@ def blocked_task_stats(
         F.round(F.expr("percentile(task_s, 0.5)"), 4).alias("median_task_s"),
         F.round(F.sum("task_s"), 4).alias("total_task_s"),
     ).first()
-    for c in caches:
-        c.unpersist()
     return spark.createDataFrame(
         [row.asDict() | {"n_blocks": chosen_b}],
         "triangles long, n_tasks long, max_task_s double, median_task_s double, "
@@ -515,7 +289,6 @@ def count_triangles(
     edges_raw: DataFrame,
     strategy: str = "blocked",
     n_blocks: int | None = None,
-    hub_threshold: int | None = None,
 ) -> DataFrame:
     """End-to-end pipeline: clean -> degree-orient -> count with the chosen
     strategy. n_blocks=None auto-derives the block count (cal_part_num
@@ -541,11 +314,7 @@ def count_triangles(
     if strategy == "kernel":
         return triangle_count_kernel(oriented)
     if strategy == "blocked":
-        # the degree table computed for the orientation doubles as the hub
-        # detector's input (total degree is orientation-invariant)
-        return triangle_count_blocked(
-            oriented, n_blocks=n_blocks, hub_threshold=hub_threshold, deg=deg
-        )
+        return triangle_count_blocked(oriented, n_blocks=n_blocks)
     raise ValueError(f"unknown strategy: {strategy}")
 
 

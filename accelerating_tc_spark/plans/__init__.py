@@ -1,1 +1,1 @@
-"""Explicit physical-plan constructors: blocking, workload balance, skew/hub handling."""
+"""Explicit physical-plan constructors: 2D edge blocking, the web-graph pipeline."""

@@ -1,24 +1,26 @@
-"""Bounded-shuffle 2D edge blocking + workload-balanced partitioning.
+"""Bounded-shuffle 2D edge blocking for the cogroup triangle count.
 
 Spark analog of TriCore's memory-bounded partition-pair execution
 (reference tricore/src/tricount_gpu.cu:103-115 `cal_part_num`,
-:337-408 pair loop; SURVEY.md J6) and of the equal-work range scheduling
-in Hu (`tc.cu:22-67,291-305`) / Fox workload bins (`tc.cu:18-33,234-331`).
+:337-408 pair loop; SURVEY.md J6), plus the Fox per-edge work estimate
+(`tc.cu:18-33`) as a diagnostic.
 
 Design: vertices hash into B blocks; every oriented edge (u,v) carries the
 key (block(u), block(v)); the adjacency table is replicated once per role
-per block-pair coordinate so a cogrouped applyInPandas task sees exactly
+per block-pair coordinate so a cogrouped applyInArrow task sees exactly
 one shard pair — shuffle volume is 2B·|adj| + |edges| and each task's
 working set is ~2/B of the adjacency, independent of total graph size.
 That bounded replication IS the scale story: B grows with data size so a
 task's shard always fits executor memory, mirroring `cal_part_num`.
 Hash blocking (vs the reference's contiguous ranges) additionally spreads
-degree skew across blocks.
+degree skew across blocks, and the degree orientation bounds every
+out-adjacency — so no equal-work rebinning pass is needed (BENCH.md §5h,
+§8b).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -111,86 +113,3 @@ def edge_workload(oriented: DataFrame, out_deg: DataFrame) -> DataFrame:
         "dst",
         ((F.col("od_u") + F.col("od_v") - mx) * F.log2(mx + F.lit(2))).alias("workload"),
     )
-
-
-def workload_balanced(
-    edges_with_workload: DataFrame, n_partitions: int, sample_mod: int = 10
-) -> DataFrame:
-    """Repartition rows into ~equal TOTAL-workload bins (reference
-    Hu/tc.cu:291-305: prefix-sum equal-work block ranges).
-
-    A plain repartitionByRange on the workload column gives equal ROW
-    counts per partition — the heavy-row partition then carries the most
-    work, the opposite of balance. Instead: a deterministic hash-sample of
-    workloads builds WEIGHTED quantile boundaries on the driver (the
-    distributed analog of the reference's prefix-sum binary search), rows
-    are binned by boundary, and bins become partitions.
-    """
-    df = edges_with_workload
-    sample = [
-        r["workload"]
-        for r in df.where(F.pmod(F.xxhash64("src", "dst"), F.lit(sample_mod)) == 0)
-        .select("workload")
-        .limit(100000)
-        .collect()
-    ]
-    if not sample:
-        sample = [r["workload"] for r in df.select("workload").limit(100000).collect()]
-    if not sample:
-        return df.repartition(n_partitions)
-    sample.sort()
-    total = float(sum(sample))
-    boundaries: list[float] = []
-    acc = 0.0
-    target = total / n_partitions
-    want = target
-    for w in sample:
-        acc += w
-        if acc >= want and len(boundaries) < n_partitions - 1:
-            boundaries.append(float(w))
-            want += target
-    if not boundaries:
-        return df.repartition(n_partitions)
-    bin_col = F.lit(0)
-    for b in boundaries:
-        bin_col = bin_col + (F.col("workload") > F.lit(b)).cast("int")
-    # Deterministic bin -> partition placement: repartitionByRange's sampler
-    # equalizes ROW counts, so it can merge two row-light (= work-heavy)
-    # bins into one partition — re-creating the imbalance the weighted
-    # quantiles just removed. Instead each bin id is remapped to a label
-    # chosen so that pmod(murmur3(label), n) == bin, making Spark's hash
-    # repartitioning an IDENTITY partitioner over bins.
-    labels = _bin_labels(df.sparkSession, n_partitions)
-    lbl_arr = F.array(*[F.lit(int(x)).cast("long") for x in labels])
-    return (
-        df.withColumn("_lbl", F.element_at(lbl_arr, bin_col.cast("int") + 1))
-        .repartition(n_partitions, F.col("_lbl"))
-        .drop("_lbl")
-    )
-
-
-_BIN_LABEL_CACHE: dict[tuple[str, int], list[int]] = {}
-
-
-def _bin_labels(spark: SparkSession, n_partitions: int) -> list[int]:
-    """label[p] = smallest long with pmod(murmur3_seed42(label), n) == p.
-
-    Computed with one tiny Spark job (the JVM's own hash — no Python
-    reimplementation to drift) and cached per (app, n). 64·n candidates miss
-    a residue with probability ~n·e^-64; the range quadruples until total.
-    """
-    key = (spark.sparkContext.applicationId, n_partitions)
-    if key not in _BIN_LABEL_CACHE:
-        found: dict[int, int] = {}
-        probe = 64 * n_partitions
-        while len(found) < n_partitions:
-            rows = (
-                spark.range(0, probe)
-                .groupBy(F.pmod(F.hash("id"), F.lit(n_partitions)).alias("p"))
-                .agg(F.min("id").alias("id"))
-                .collect()
-            )
-            found = {int(r["p"]): int(r["id"]) for r in rows}
-            probe *= 4
-        _BIN_LABEL_CACHE[key] = [found[p] for p in range(n_partitions)]
-    return _BIN_LABEL_CACHE[key]

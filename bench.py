@@ -214,8 +214,6 @@ def main() -> None:
         return run_dedup()
     if "--truss" in sys.argv:
         return run_truss()
-    if "--kcore" in sys.argv:
-        return run_kcore_ab()
     if "--stream" in sys.argv:
         return run_stream_volume()
 
@@ -336,8 +334,8 @@ def scaling_single(cores: int, n_vertices: int | None = None, n_edges_req: int |
     # to reach steady state and would swamp the comparison. Then min-of-3
     # measured runs — same job at both levels; n_blocks is auto-derived per
     # level (the primary protocol) unless SPARK_GRAFT_SCALE_BLOCKS pins it.
-    # The cached degree table feeds hub detection so graph prep stays
-    # outside the measured window.
+    # Graph prep (degrees, orientation) is cached outside the measured
+    # window.
     from accelerating_tc_spark.plans.blocking import auto_n_blocks
 
     chosen_b = SCALE_BLOCKS or auto_n_blocks(
@@ -347,13 +345,13 @@ def scaling_single(cores: int, n_vertices: int | None = None, n_edges_req: int |
     n_warmups = int(os.environ.get("SPARK_GRAFT_SCALE_WARMUPS", "2"))
     spark.sparkContext.setJobGroup("warmup", "scaling warm-up runs")
     for _ in range(n_warmups):
-        triangles.triangle_count_blocked(oriented, n_blocks=SCALE_BLOCKS, deg=deg).collect()
+        triangles.triangle_count_blocked(oriented, n_blocks=SCALE_BLOCKS).collect()
     spark.sparkContext.setJobGroup("measure", "scaling measured runs")
     dt = float("inf")
     tri = 0
     for _ in range(n_measures):
         t0 = time.time()
-        tri = triangles.triangle_count_blocked(oriented, n_blocks=SCALE_BLOCKS, deg=deg).collect()[0][
+        tri = triangles.triangle_count_blocked(oriented, n_blocks=SCALE_BLOCKS).collect()[0][
             "triangles"
         ]
         dt = min(dt, time.time() - t0)
@@ -550,9 +548,9 @@ def run_scaling() -> None:
 
 
 def run_skew() -> None:
-    """Hub-routing A/B on a planted-mega-hub Zipf graph: per-task kernel
-    max/median seconds and wall time with the hub route ON (auto threshold)
-    vs OFF (threshold=2^62) — the skew evidence for the blocked TC."""
+    """Skew evidence for the blocked TC: per-task kernel max/median seconds
+    and wall time of the cogroup route (pinned B=16) on a planted-mega-hub
+    Zipf graph, min of N runs after a warm-up."""
     from pyspark.sql import functions as F
 
     from accelerating_tc_spark.operators import prep, triangles
@@ -572,11 +570,9 @@ def run_skew() -> None:
     oriented = prep.orient_by_degree(canonical).cache()
     oriented.count()
 
-    def measure_once(hub_threshold):
+    def measure_once():
         t0 = time.time()
-        row = triangles.blocked_task_stats(
-            oriented, n_blocks=16, hub_threshold=hub_threshold
-        ).collect()[0]
+        row = triangles.blocked_task_stats(oriented, n_blocks=16).collect()[0]
         return {
             "wall_s": round(time.time() - t0, 3),
             "triangles": row["triangles"],
@@ -586,38 +582,30 @@ def run_skew() -> None:
             "skew_ratio": round(row["max_task_s"] / max(row["median_task_s"], 1e-9), 1),
         }
 
-    # interleaved min-of-N A/B (the r5 headline protocol): the r2
-    # single-shot comparison's apparent hub-route win was warm-up-order
-    # bias (BENCH.md §5h), and the r3 decision was measured against the
-    # OLD gather-both-sides kernel — the r5 probe-kernel rewrite moved the
-    # baseline, so the crossover is re-measured per round.
     rounds = int(os.environ.get("SPARK_GRAFT_SKEW_ROUNDS", "3"))
-    measure_once(None)  # shared warm-up (codegen/JIT/worker pool)
-    measure_once(100_000)
-    visits: dict[str, list[dict]] = {"off": [], "on": []}
-    for _ in range(rounds):
-        visits["off"].append(measure_once(None))  # default: no hub route
-        visits["on"].append(measure_once(100_000))  # route the mega-hub
-    off = min(visits["off"], key=lambda r: r["wall_s"])
-    on = min(visits["on"], key=lambda r: r["wall_s"])
+    measure_once()  # warm-up (codegen/JIT/worker pool)
+    visits = [measure_once() for _ in range(rounds)]
+    best = min(visits, key=lambda r: r["wall_s"])
     spark.stop()
     print(
         json.dumps(
             {
-                "metric": "tc_blocked_skew_ab",
-                "value": on["wall_s"],
+                "metric": "tc_blocked_skew",
+                "value": best["max_task_s"],
                 "unit": "sec",
-                "queries": {"hub_route_on": on["wall_s"], "hub_route_off": off["wall_s"]},
+                "queries": {
+                    "cogroup_wall_s": best["wall_s"],
+                    "max_task_s": best["max_task_s"],
+                    "median_task_s": best["median_task_s"],
+                },
                 "sf": _sf_label(SF_DIR),
-                "detail": {"on": on, "off": off, "n_edges": n_edges},
+                "detail": best | {"n_edges": n_edges},
                 "protocol": {
                     "rounds": rounds,
-                    "stat": "min_per_config_interleaved",
-                    "visits": {
-                        k: [r["wall_s"] for r in vs] for k, vs in visits.items()
-                    },
+                    "stat": "min_wall_of_n",
+                    "visits": [r["wall_s"] for r in visits],
                 },
-                "parity": on["triangles"] == off["triangles"],
+                "parity": len({r["triangles"] for r in visits}) == 1,
             }
         )
     )
@@ -945,67 +933,10 @@ def run_stream_volume() -> None:
     )
 
 
-def run_kcore_ab() -> None:
-    """Same-session A/B: hash-aggregate h-index round vs the superseded
-    per-round row_number sort window, same graph, results asserted equal.
-    Interleaved B/A/B/A after a shared warm-up so JVM/codegen warm-up and
-    slow VM drift both cancel; min per arm reported."""
-    from accelerating_tc_spark.operators import kcore, prep
-    from accelerating_tc_spark.session import get_spark
-    from accelerating_tc_spark.sources import synthetic
-
-    spark = get_spark("bench_kcore", cores=CPUS, shuffle_partitions=CPUS)
-    v = int(os.environ.get("SPARK_GRAFT_KCORE_V", "50000"))
-    e = int(os.environ.get("SPARK_GRAFT_KCORE_E", "1000000"))
-    rounds = int(os.environ.get("SPARK_GRAFT_KCORE_ROUNDS", "12"))
-    raw = synthetic.zipf_edges_distributed(spark, v, e, s=0.5)
-    canonical = prep.canonicalize_edges(raw).cache()
-    canonical.count()
-
-    # fixed-round mode: both impls compute bit-identical per-round states
-    # (capping neighbor estimates at the receiver's estimate is h-invariant),
-    # so N materialized rounds isolate per-round cost and stay comparable
-    def run(impl: str):
-        t0 = time.time()
-        out = {
-            r["vertex"]: r["core"]
-            for r in kcore.core_numbers(
-                spark, canonical, impl=impl, fixed_rounds=rounds
-            ).collect()
-        }
-        return time.time() - t0, out
-
-    run("aggregate")  # shared warm-up
-    walls: dict[str, list[float]] = {"window": [], "aggregate": []}
-    ref = None
-    for impl in ("window", "aggregate", "window", "aggregate"):
-        dt, out = run(impl)
-        walls[impl].append(round(dt, 3))
-        if ref is None:
-            ref = out
-        assert out == ref, "impl results diverged"
-    spark.stop()
-    a, w = min(walls["aggregate"]), min(walls["window"])
-    print(
-        json.dumps(
-            {
-                "metric": "kcore_round_ab",
-                "value": round(w / a, 3),
-                "unit": "speedup_window_over_aggregate",
-                "queries": {"aggregate_s": a, "window_s": w},
-                "sf": _sf_label(SF_DIR),
-                "detail": {"walls": walls, "vertices": v, "edges": e,
-                           "rounds": rounds, "per_round_aggregate_s": round(a / rounds, 3),
-                           "per_round_window_s": round(w / rounds, 3),
-                           "parity": True},
-            }
-        )
-    )
-
-
 def run_cc_rounds() -> None:
-    """High-diameter round-count evidence: path graph, pointer-jumping CC vs
-    plain min-label propagation (capped)."""
+    """High-diameter round-count evidence: pointer-jumping CC on a path
+    graph, whose diameter would cost plain min-label propagation n - 1
+    rounds."""
     from pyspark.sql import functions as F
 
     from accelerating_tc_spark.operators import components
@@ -1019,16 +950,6 @@ def run_cc_rounds() -> None:
     t0 = time.time()
     jump = components.connected_components_run(spark, path, max_iterations=64)
     jump_s = round(time.time() - t0, 3)
-    cap = 32
-    t0 = time.time()
-    try:
-        base = components.connected_components_run(
-            spark, path, max_iterations=cap, algorithm="minlabel"
-        )
-        base_rounds: float | str = base.iterations
-    except RuntimeError:
-        base_rounds = f">{cap} (diameter-bound, not converged)"
-    base_s = round(time.time() - t0, 3)
     spark.stop()
     print(
         json.dumps(
@@ -1036,13 +957,9 @@ def run_cc_rounds() -> None:
                 "metric": "cc_rounds_path_graph",
                 "value": jump.iterations,
                 "unit": "rounds",
-                "queries": {"jump_rounds": jump.iterations, "jump_s": jump_s, "minlabel_s": base_s},
+                "queries": {"jump_rounds": jump.iterations, "jump_s": jump_s},
                 "sf": _sf_label(SF_DIR),
-                "detail": {
-                    "path_vertices": n,
-                    "jump_converged": jump.converged,
-                    "minlabel_rounds": base_rounds,
-                },
+                "detail": {"path_vertices": n, "jump_converged": jump.converged},
             }
         )
     )

@@ -234,13 +234,15 @@ def capture_iter_plans(outdir: str, suffix: str) -> None:
     touched (kcore h-index, SCC min-label fixpoint, BFS frontier expand) —
     captured from the operators' own code paths like capture_plans."""
     spark = _spark()
-    canonical, _ = _graph(spark)
-    plans = {
-        "core_numbers_round": _kcore_round_plan(spark, canonical),
-        "scc_fixpoint_round": _scc_round_plan(spark, canonical),
-        "bfs_distances_round": _bfs_round_plan(spark, canonical),
-    }
-    spark.stop()
+    try:
+        canonical, _ = _graph(spark)
+        plans = {
+            "core_numbers_round": _kcore_round_plan(spark, canonical),
+            "scc_fixpoint_round": _scc_round_plan(spark, canonical),
+            "bfs_distances_round": _bfs_round_plan(spark, canonical),
+        }
+    finally:
+        spark.stop()
     os.makedirs(outdir, exist_ok=True)
     for name, text in plans.items():
         p = Path(outdir) / f"{name}_{suffix}.txt"

@@ -1,9 +1,6 @@
-"""Blocking-plan unit tests: auto block count (cal_part_num analog) and
-deterministic equal-work bin placement."""
+"""Blocking-plan unit tests: auto block count (cal_part_num analog)."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from accelerating_tc_spark.operators import triangles
 from accelerating_tc_spark.plans import blocking
@@ -44,44 +41,3 @@ def test_auto_n_blocks_end_to_end_parity(spark):
     assert row["triangles"] == expected
     cores = spark.sparkContext.defaultParallelism
     assert row["n_blocks"] == blocking.auto_n_blocks(cores, len(pairs))
-
-
-def test_workload_balanced_bins_isolated(spark):
-    """Each equal-work bin must land in its OWN partition — the range-sampler
-    failure mode (merging adjacent row-light bins) is what this pins."""
-    n_part = 4
-    # 4 heavy rows (workload 1000) + 4000 light rows (workload 1): weighted
-    # quantiles put each heavy row in its own bin; rows-based partitioning
-    # would fuse the heavy bins (few ROWS) and split the light one.
-    heavy = spark.range(0, 4).select(
-        F.col("id").alias("src"), (F.col("id") + 100000).alias("dst"),
-        (F.lit(1000.0) + F.col("id")).alias("workload"),
-    )
-    light = spark.range(0, 4000).select(
-        F.col("id").alias("src"), (F.col("id") + 5000).alias("dst"),
-        F.lit(1.0).alias("workload"),
-    )
-    df = heavy.unionAll(light)
-    spread = blocking.workload_balanced(df, n_part, sample_mod=1)
-    per_part = (
-        spread.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.sum("workload").alias("w"), F.count(F.lit(1)).alias("rows"))
-        .collect()
-    )
-    loads = sorted(float(r["w"]) for r in per_part)
-    total = sum(loads)
-    # no partition may carry more than ~2x its fair share of WORK
-    assert max(loads) <= 2.0 * total / n_part, loads
-    assert spread.count() == 4004  # no rows lost
-
-
-def test_bin_labels_are_identity_partitioner(spark):
-    for n in (3, 5, 8):
-        labels = blocking._bin_labels(spark, n)
-        assert len(labels) == n
-        got = (
-            spark.createDataFrame([(int(x),) for x in labels], "lbl long")
-            .select(F.pmod(F.hash("lbl"), F.lit(n)).alias("p"))
-            .collect()
-        )
-        assert sorted(r["p"] for r in got) == list(range(n))

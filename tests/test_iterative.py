@@ -12,6 +12,7 @@ from accelerating_tc_spark.operators import (
     labelprop,
     pagerank,
     prep,
+    supersteps,
 )
 from accelerating_tc_spark.sources import synthetic
 
@@ -184,6 +185,14 @@ def test_personalized_pagerank_explicit_seed_frame(spark, graph):
     assert all(abs(got[v]) < 1e-12 for v in got if v not in (600, 601))
 
 
+@pytest.fixture
+def classic_plan(monkeypatch):
+    """Every test graph sits under the state-broadcast gate, so the plain
+    tests run the broadcast-state plan; a zero budget forces the classic
+    (relation partitioned by src, state shuffled) plan."""
+    monkeypatch.setattr(supersteps, "STATE_BROADCAST_MAX_BYTES", 0)
+
+
 def test_connected_components_exact(spark, graph):
     pairs, canonical = graph
     got = {
@@ -193,21 +202,41 @@ def test_connected_components_exact(spark, graph):
     assert got == python_components(pairs)
 
 
+@pytest.mark.usefixtures("classic_plan")
+def test_connected_components_exact_classic_plan(spark, graph):
+    test_connected_components_exact(spark, graph)
+
+
 def test_cc_pointer_jumping_on_path_graph(spark):
-    """High-diameter fixture: a 120-vertex path. Plain min-propagation needs
-    O(diameter) rounds; pointer jumping must converge in O(log n) and give
-    byte-identical labels."""
+    """High-diameter fixture: a 120-vertex path. Plain min-propagation would
+    need O(diameter) rounds; pointer jumping must converge in O(log n) and
+    give the exact labels."""
     pairs = [(i, i + 1) for i in range(119)]
     canonical = prep.canonicalize_edges(synthetic.edges_df(spark, pairs))
-    jump = components.connected_components_run(spark, canonical, algorithm="jump")
+    jump = components.connected_components_run(spark, canonical)
     assert jump.converged and jump.iterations <= 12  # ~log2(120) + slack
-    base = components.connected_components_run(
-        spark, canonical, max_iterations=130, algorithm="minlabel"
-    )
-    assert base.converged and base.iterations > jump.iterations
-    j = {r["vertex"]: r["component"] for r in jump.state.collect()}
-    b = {r["vertex"]: r["component"] for r in base.state.collect()}
-    assert j == b == {v: 0 for v in range(120)}
+    got = {r["vertex"]: r["component"] for r in jump.state.collect()}
+    assert got == python_components(pairs)
+
+
+@pytest.mark.usefixtures("classic_plan")
+def test_cc_checkpoint_resume_classic_plan(spark, tmp_path):
+    """An interrupted checkpointed CC run on the classic plan resumes from
+    its latest snapshot and lands on the same fixpoint, in the same number
+    of rounds, as an uninterrupted run."""
+    pairs = [(i, i + 1) for i in range(119)]
+    canonical = prep.canonicalize_edges(synthetic.edges_df(spark, pairs))
+    ckpt = str(tmp_path / "cc_ckpt")
+    with pytest.raises(RuntimeError, match="NOT a fixpoint"):
+        components.connected_components_run(
+            spark, canonical, max_iterations=2, checkpoint_dir=ckpt
+        )
+    assert supersteps.latest_checkpoint(ckpt) == 1
+    resumed = components.connected_components_run(spark, canonical, checkpoint_dir=ckpt)
+    fresh = components.connected_components_run(spark, canonical)
+    assert resumed.converged and resumed.iterations == fresh.iterations
+    got = {r["vertex"]: r["component"] for r in resumed.state.collect()}
+    assert got == python_components(pairs)
 
 
 def test_iterate_nonconverged_raises(spark):
@@ -215,9 +244,7 @@ def test_iterate_nonconverged_raises(spark):
     pairs = [(i, i + 1) for i in range(60)]
     canonical = prep.canonicalize_edges(synthetic.edges_df(spark, pairs))
     with pytest.raises(RuntimeError, match="NOT a fixpoint"):
-        components.connected_components(
-            spark, canonical, max_iterations=3, algorithm="minlabel"
-        )
+        components.connected_components(spark, canonical, max_iterations=2)
 
 
 def test_label_propagation_matches_python(spark, graph):
@@ -258,6 +285,11 @@ def test_core_numbers_exact(spark, graph):
     got = {r["vertex"]: r["core"] for r in kcore.core_numbers(spark, canonical).collect()}
     expected = python_core_numbers(pairs)
     assert got == expected
+
+
+@pytest.mark.usefixtures("classic_plan")
+def test_core_numbers_exact_classic_plan(spark, graph):
+    test_core_numbers_exact(spark, graph)
 
 
 def test_orient_by_core_preserves_edges_and_counts(spark, graph):

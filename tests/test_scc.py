@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from accelerating_tc_spark.operators import scc
+from accelerating_tc_spark.operators import scc, supersteps
 from accelerating_tc_spark.sources import tpch_graph
 
 
@@ -124,6 +124,13 @@ def test_random_digraph_matches_kosaraju(spark):
     expect = python_scc(pairs)
     got = run_scc(spark, [(a, b) for a, b in pairs])
     assert got == expect
+
+
+def test_random_digraph_matches_kosaraju_classic_plan(spark, monkeypatch):
+    # the test graphs sit under the state-broadcast gate; a zero budget
+    # forces the classic (shuffled-state) plan in both SCC phases
+    monkeypatch.setattr(supersteps, "STATE_BROADCAST_MAX_BYTES", 0)
+    test_random_digraph_matches_kosaraju(spark)
 
 
 def test_outer_cap_raises(spark):

@@ -1,6 +1,7 @@
 """Cross-implementation triangle-count agreement (the reference's de-facto
 oracle, SURVEY.md §5): all four Spark strategies must agree with each other,
-with the numpy trace(A^3)/6 oracle, and with known exact counts."""
+with the numpy trace(A^3)/6 oracle, and with known exact counts; both routes
+of the blocked strategy are also run on degenerate inputs."""
 
 from __future__ import annotations
 
@@ -82,45 +83,21 @@ def test_blocked_sparse_64bit_vertex_ids(spark):
     assert got == expected
 
 
-@pytest.mark.parametrize("hub_threshold", [2, 5, 20])
-def test_blocked_hub_route_parity(spark, hub_threshold):
-    """Force the hub route on (low thresholds make MANY vertices hubs —
-    including hub-hub edges and empty-adjacency hubs) and require exact
-    parity with the numpy oracle."""
-    pairs = synthetic.powerlaw_edge_pairs(200, 1200, seed=7)
-    expected = synthetic.numpy_triangle_count(pairs)
-    edges = synthetic.edges_df(spark, pairs.tolist())
-    for nb in (2, 4):
-        got = _count(
-            triangles.count_triangles(
-                edges, strategy="blocked", n_blocks=nb, hub_threshold=hub_threshold
-            )
-        )
-        assert got == expected, f"threshold={hub_threshold} n_blocks={nb}"
-
-
 def test_blocked_mega_hub_parity(spark):
     """Planted mega-hub (one vertex adjacent to half the graph): the
-    default (no hub route) and an explicitly-engaged hub route must both
-    be exact."""
+    degree orientation bounds the hub's out-adjacency, so the plain
+    cogroup route must be exact without any hub path."""
     edges = synthetic.hub_edges(spark, n_vertices=300)
     pairs = [(r["src"], r["dst"]) for r in edges.collect()]
     expected = synthetic.numpy_triangle_count(pairs)
     got = _count(triangles.count_triangles(edges, strategy="blocked", n_blocks=4))
     assert got == expected
-    # explicitly routing the mega-hub must give the same answer
-    got_on = _count(
-        triangles.count_triangles(
-            edges, strategy="blocked", n_blocks=4, hub_threshold=50
-        )
-    )
-    assert got_on == expected
 
 
 def test_blocked_task_stats_schema(spark):
     edges = synthetic.hub_edges(spark, n_vertices=120)
     oriented = prep.orient_by_degree(prep.canonicalize_edges(edges))
-    row = triangles.blocked_task_stats(oriented, n_blocks=2, hub_threshold=10).collect()[0]
+    row = triangles.blocked_task_stats(oriented, n_blocks=2).collect()[0]
     pairs = [(r["src"], r["dst"]) for r in prep.canonicalize_edges(edges).collect()]
     assert row["triangles"] == synthetic.numpy_triangle_count(pairs)
     assert row["n_tasks"] >= 1 and row["max_task_s"] >= row["median_task_s"]
@@ -165,19 +142,37 @@ def test_triangle_count_estimate_unbiased_ballpark(spark):
     assert again["triangles_est"] == row["triangles_est"]
 
 
-def test_hub_route_hostile_threshold_bounded_driver(spark, monkeypatch):
-    """hub_threshold=1 makes EVERY vertex a hub candidate on a large graph:
-    the candidate collect must be bounded by construction (row cap inside
-    the query), the selected set must respect both caps, and the count must
-    still be exact — the escape hatch for the hostile case the cap exists
-    for. A tiny _MAX_HUB_ROWS makes the cap's effect observable."""
-    from accelerating_tc_spark.operators import triangles as T
+# Degenerate inputs x the two blocked routes. Wide ids map v -> 2^31 + v·(2^33+1),
+# an isomorphism, so the oracle counts the compact pairs.
+_WIDE_OFF, _WIDE_STRIDE = 1 << 31, (1 << 33) + 1
+_K4_PENDANT = [(0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3), (3, 4)]
+DEGENERATE = {
+    "empty": [],
+    "one_edge": [(0, 1)],
+    "self_loops_only": [(0, 0), (1, 1), (2, 2)],
+    "duplicate_and_mirrored": [
+        (0, 1), (1, 0), (0, 1), (1, 2), (2, 1), (2, 0), (0, 2), (2, 3), (3, 2), (3, 3),
+    ],
+    "ids_ge_2_31": _K4_PENDANT,
+}
 
-    monkeypatch.setattr(T, "_MAX_HUB_ROWS", 7)
-    pairs = synthetic.powerlaw_edge_pairs(500, 3000, seed=11)
+
+@pytest.mark.parametrize("route", ["broadcast_csr", "cogroup_auto_b", "cogroup_b3"])
+@pytest.mark.parametrize("case", sorted(DEGENERATE))
+def test_blocked_routes_degenerate_inputs(spark, monkeypatch, case, route):
+    pairs = DEGENERATE[case]
     expected = synthetic.numpy_triangle_count(pairs)
-    edges = synthetic.edges_df(spark, pairs.tolist())
-    got = _count(
-        T.count_triangles(edges, strategy="blocked", n_blocks=3, hub_threshold=1)
+    if case == "ids_ge_2_31":
+        pairs = [(_WIDE_OFF + a * _WIDE_STRIDE, _WIDE_OFF + b * _WIDE_STRIDE) for a, b in pairs]
+    edges = synthetic.edges_df(spark, pairs)
+    n_blocks = 3 if route == "cogroup_b3" else None
+    if route == "cogroup_auto_b":
+        monkeypatch.setattr(triangles, "_TC_BROADCAST_MAX_BYTES", 0)
+    took_broadcast = []
+    real = triangles._broadcast_partials
+    monkeypatch.setattr(
+        triangles, "_broadcast_partials", lambda o: took_broadcast.append(1) or real(o)
     )
+    got = _count(triangles.count_triangles(edges, strategy="blocked", n_blocks=n_blocks))
     assert got == expected
+    assert bool(took_broadcast) == (route == "broadcast_csr")
