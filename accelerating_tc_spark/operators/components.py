@@ -35,7 +35,7 @@ def connected_components_run(
     """Full run record (state (vertex, component) + per-round metrics)."""
     # Broadcast-state plan decision (r7, shared with labelprop and k-core):
     # above the 32·|E| gate the classic shuffled-state plan runs.
-    bcast_state = supersteps.broadcast_state_ok(canonical.count())
+    plan = supersteps.state_plan(32 * canonical.count())
     sym = prep.symmetrize(canonical)
     verts = sym.select(F.col("src").alias("vertex")).distinct()
 
@@ -44,20 +44,13 @@ def connected_components_run(
     # identity), so it folds into init as ONE aggregate over the cached
     # relation (r7): the first superstep's join disappears, the fixpoint
     # and every later state are unchanged, and only the reported iteration
-    # count shrinks by one. The grouping side matches the partitioning key
-    # (symmetry + self-loops make min-over-neighbors∪self the same either
-    # way), so init is exchange-free under both plans.
-    key, nbr = ("dst", "src") if bcast_state else ("src", "dst")
-
-    def init(rel: DataFrame) -> DataFrame:
-        return rel.groupBy(F.col(key).alias("vertex")).agg(F.min(nbr).alias("component"))
-
+    # count shrinks by one.
     return supersteps.min_label_fixpoint(
         spark,
         sym,
         verts,
-        init,
-        bcast_state,
+        lambda rel: plan.min_neighbor(rel, "component"),
+        plan,
         max_iterations,
         label="component",
         checkpoint_dir=checkpoint_dir,

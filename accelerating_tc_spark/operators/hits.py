@@ -120,21 +120,12 @@ def hits_run(
             max_iterations=n_iterations,
             checkpoint_dir=checkpoint_dir,
             checkpoint_every=3,
+            helpers=(verts, e_by_src, e_by_dst),
         )
         # the final state may lazily read a cutter scratch slot; close()
         # re-anchors it in block storage before the scratch dir is removed
-        final_state = cutter.close(run.state)
-    run = supersteps.SuperstepRun(
-        state=final_state,
-        iterations=run.iterations,
-        converged=run.converged,
-        metrics=run.metrics,
-        # close() only ever re-anchors (cuts) the state further, so the
-        # loop's cut status carries over — lets finalize skip its
-        # redundant re-checkpoint job (r7)
-        state_is_cut=run.state_is_cut,
-    )
-    return supersteps.finalize(run, verts, e_by_src, e_by_dst)
+        run.state = cutter.close(run.state)
+    return run
 
 
 def hits(

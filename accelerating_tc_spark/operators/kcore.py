@@ -66,28 +66,19 @@ def core_numbers(
     max_iterations defaults high (500): rounds are flat-cost (superstep
     hard cuts bound the lineage chain) and deep peel chains legitimately
     need hundreds of rounds — one round per remaining peel level."""
-    n_part = spark.sparkContext.defaultParallelism
     # Broadcast-state plan (r7, as in labelprop/components): h-index rounds
-    # are integer joins + hash aggregates, so on broadcastable-state graphs
-    # the relation is partitioned by dst (the grouping key) and per-round
-    # state ships as explicit broadcasts — a round runs exchange-free.
-    bcast_state = supersteps.broadcast_state_ok(canonical.count())
-    sym = (
-        prep.symmetrize(canonical)
-        .repartition(n_part, "dst" if bcast_state else "src")
-        .cache()
-    )
+    # are integer joins + hash aggregates, so either plan gives the exact
+    # fixpoint.
+    plan = supersteps.state_plan(32 * canonical.count())
+    sym = plan.relation(prep.symmetrize(canonical))
     init = prep.degrees(canonical).select("vertex", F.col("degree").alias("core"))
-
-    def _st(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if bcast_state else df
 
     def step(state: DataFrame, i: int) -> DataFrame:
         st_src = state.select(F.col("vertex").alias("src"), F.col("core").alias("src_core"))
         st_dst = state.select(F.col("vertex").alias("dst"), F.col("core").alias("dst_core"))
         capped = (
-            sym.join(_st(st_src), "src")
-            .join(_st(st_dst), "dst")
+            sym.join(plan.state(st_src), "src")
+            .join(plan.state(st_dst), "dst")
             .select(
                 F.col("dst").alias("vertex"),
                 F.least("src_core", "dst_core").alias("c"),
@@ -99,12 +90,12 @@ def core_numbers(
             .agg(F.collect_list(F.struct("c", "cnt")).alias("hist"))
             .select("vertex", _hindex_from_histogram().alias("new_core"))
         )
-        return state.join(_st(hidx), "vertex", "left").select(
+        return state.join(plan.state(hidx), "vertex", "left").select(
             "vertex", F.least("core", F.coalesce("new_core", F.lit(0))).alias("core")
         )
 
     # core estimates only ever decrease: the shared monotone-sum probe
-    run = supersteps.iterate(
+    return supersteps.iterate(
         spark,
         init,
         step,
@@ -113,8 +104,8 @@ def core_numbers(
         tolerance=0.0,
         checkpoint_dir=checkpoint_dir,
         on_nonconverged="raise",  # exact-semantics operator
-    )
-    return run.state
+        helpers=(sym,),
+    ).state
 
 
 def core_numbers_oracle_sql(edges_cte: str, n_rounds: int = 24) -> str:

@@ -6,8 +6,11 @@ reproducible and the unrolled SQL oracle matches exactly). Vertices keep
 their label when they have no neighbors. Fixed round count for determinism
 (synchronous LP need not converge — it can 2-cycle on bipartite structures).
 
-Each round: one join (labels onto edge endpoints), one count agg, one
-window argmax — all standard shuffles on the vertex key.
+Each round: one join (labels onto edge endpoints), one count agg per
+(vertex, label) and one hash-only argmax per vertex. The broadcast-state
+plan (`supersteps.state_plan`, 32·|E| gate) runs a round with zero
+exchanges; the classic plan shuffles the state and the contribution rows
+once. Round 1 from the identity labeling folds into init.
 """
 
 from __future__ import annotations
@@ -16,7 +19,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import prep, supersteps
-from .supersteps import broadcast_state_ok as _broadcast_state_ok
 
 
 def label_propagation_run(
@@ -43,34 +45,17 @@ def label_propagation_run(
     packable = (
         bounds["lo"] is not None and bounds["lo"] >= 0 and bounds["hi"] < (1 << 31)
     )
-    bcast_state = _broadcast_state_ok(bounds["m"])
+    plan = supersteps.state_plan(32 * bounds["m"])
     _HALF = 1 << 31
-    # Broadcast-state plan: the relation is partitioned by dst — the key
-    # every per-round aggregate groups on — and the (vertex-sized) state is
-    # shipped as an explicit broadcast, so a round runs with ZERO exchanges.
-    # Classic plan (big graphs): partition by src so the shuffled join is
-    # co-partitioned and only the state table moves per round.
-    sym = (
-        prep.symmetrize(canonical)
-        .repartition(n_part, "dst" if bcast_state else "src")
-        .cache()
-    )
+    sym = plan.relation(prep.symmetrize(canonical))
     # Round 1 from the identity labeling collapses to "min neighbor id":
     # on a simple graph every neighbor's initial label is distinct, so all
     # counts tie at 1 and the (cnt DESC, label ASC) argmax picks the
     # smallest neighbor label. Folding it into init turns the first (most
     # expensive) superstep into one aggregate over the cached relation
     # (r7); rounds 2..n run unchanged, so the n-round result is identical.
-    # The grouping side matches the partitioning key (symmetry makes
-    # min-over-neighbors the same either way), keeping init exchange-free.
     if n_iterations > 0:
-        init = (
-            sym.groupBy(F.col("dst").alias("vertex")).agg(F.min("src").alias("label"))
-            if bcast_state
-            else sym.groupBy(F.col("src").alias("vertex")).agg(
-                F.min("dst").alias("label")
-            )
-        )
+        init = plan.min_neighbor(sym, "label")
         n_rounds = n_iterations - 1
     else:
         init = sym.select(F.col("src").alias("vertex")).distinct().select(
@@ -88,11 +73,10 @@ def label_propagation_run(
         # second exchange — and its max(struct(cnt, -label)) argmax planned
         # as a SortAggregate (struct aggregation buffers are not
         # hash-aggregable), sorting the ~|E|-row label table twice a round.
-        joined = sym.join(
-            F.broadcast(state) if bcast_state else state,
-            sym["src"] == state["vertex"],
-        ).select(F.col("dst").alias("vertex"), "label")
-        contribs = joined if bcast_state else joined.repartition(n_part, "vertex")
+        joined = sym.join(plan.state(state), sym["src"] == state["vertex"]).select(
+            F.col("dst").alias("vertex"), "label"
+        )
+        contribs = joined if plan.broadcast else joined.repartition(n_part, "vertex")
         nbr_labels = contribs.groupBy("vertex", "label").agg(
             F.count(F.lit(1)).alias("cnt")
         )
@@ -119,7 +103,7 @@ def label_propagation_run(
             .agg(F.min("label").alias("label"))
         )
 
-    run = supersteps.iterate(
+    return supersteps.iterate(
         spark,
         init,
         step,
@@ -131,8 +115,8 @@ def label_propagation_run(
         # end only (r7; was every 2). The plan depth stays bounded by
         # n_iterations, which callers keep small in fixed-round mode.
         checkpoint_every=max(n_rounds, 1),
+        helpers=(sym,),
     )
-    return supersteps.finalize(run, sym)
 
 
 def label_propagation(

@@ -1,10 +1,13 @@
-"""PageRank as checkpointed DataFrame supersteps (north-star addition).
+"""PageRank and personalized PageRank as checkpointed DataFrame supersteps
+(north-star addition), sharing one walk (`_Walk`).
 
-Runs on the symmetrized edge table (undirected graphs have no dangling
-vertices among the vertex set, since every vertex present has out-degree
->= 1). Contribution join is a shuffle on src; rank update is a groupBy(dst)
-partial+final agg. Both reuse the same hash partitioning, and the vertex
-and out-degree tables are computed once outside the loop.
+The walk runs on the symmetrized edge table: undirected graphs have no
+dangling vertices, so the out-degree table IS the vertex set. Its cached
+(src, dst, out_degree) relation is partitioned by the broadcast-state plan
+(`supersteps.state_plan`, 24·|V| gate), so a round moves only the rank
+table, or nothing at all; the contribution sum reassociates between the
+two plans, and both match the 6dp-rounded oracle (verified at every contract
+SF). Each run adds only its initial ranks and its teleport term.
 
 Deterministic fixed-iteration mode exists so the unrolled-SQL DuckDB oracle
 matches bit-for-bit after 6-decimal rounding.
@@ -12,12 +15,50 @@ matches bit-for-bit after 6-decimal rounding.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import prep, supersteps
 
 DAMPING = 0.85
+
+
+class _Walk:
+    """The walk both runs share. Construction runs one job, the |V| count,
+    which also materializes the cached out-degree table (r7: one aggregate
+    gives degrees and vertex set, no separate distinct pass)."""
+
+    def __init__(self, spark: SparkSession, canonical: DataFrame):
+        self.spark = spark
+        self.sym = prep.symmetrize(canonical)
+        self.out_deg = (
+            self.sym.groupBy(F.col("src").alias("vertex"))
+            .agg(F.count(F.lit(1)).alias("out_degree"))
+            .cache()
+        )
+        self.n = self.out_deg.count()
+        self.verts = self.out_deg.select("vertex")
+
+    def run(
+        self, init: DataFrame, teleport: Callable[[DataFrame], DataFrame], helpers=(), **kw
+    ) -> "supersteps.SuperstepRun":
+        """`iterate` rank <- teleport((vertex, c) contribution sums) from
+        `init`; the caller's cached `helpers` are released with the walk's."""
+        sym, od = self.sym, self.out_deg
+        plan = supersteps.state_plan(24 * self.n)
+        edges_od = plan.relation(
+            sym.join(od, sym["src"] == od["vertex"]).select("src", "dst", "out_degree")
+        )
+
+        def step(state: DataFrame, i: int) -> DataFrame:
+            contrib = edges_od.join(plan.state(state), edges_od["src"] == state["vertex"]).select(
+                F.col("dst").alias("vertex"), (F.col("rank") / F.col("out_degree")).alias("c")
+            )
+            return teleport(contrib.groupBy("vertex").agg(F.sum("c").alias("c")))
+
+        return supersteps.iterate(self.spark, init, step, helpers=(od, edges_od, *helpers), **kw)
 
 
 def pagerank_run(
@@ -31,56 +72,14 @@ def pagerank_run(
     """Full SuperstepRun (state + per-round lineage metrics) for PageRank.
 
     `run.state` is (vertex, rank) after n_iterations (or earlier L1
-    convergence if `tolerance` is set); ranks sum to 1 over the vertex set.
+    convergence if `tolerance` is set); ranks sum to 1 over the vertex set,
+    which an edge-less graph leaves empty.
     `run.metrics[i].wall_s` gives per-round walls — in unmetered
     fixed-round mode rounds between lineage cuts are lazy, so their wall
     lands on the next cut round (document-read accordingly)."""
-    n_part = spark.sparkContext.defaultParallelism
-    sym = prep.symmetrize(canonical)
-    # On the symmetrized graph every vertex has out-degree >= 1, so the
-    # out-degree table IS the vertex set — one aggregate replaces the old
-    # separate distinct pass over sym (r7: one fewer 2|E|-row job per run).
-    out_deg = (
-        sym.groupBy(F.col("src").alias("vertex"))
-        .agg(F.count(F.lit(1)).alias("out_degree"))
-        .cache()
-    )
-    n = out_deg.count()
-    verts = out_deg.select("vertex")
-    # Broadcast-state plan (r7, as in labelprop/components): with a rank
-    # table small enough to broadcast (|V| known exactly here), the edge
-    # relation is partitioned by dst — the per-round grouping key — and a
-    # round runs with ZERO exchanges. Above the cap: classic plan, edges
-    # partitioned by the join key so only the rank table shuffles per
-    # round. Note the contribution sum reassociates between the two plans;
-    # both match the 6dp-rounded oracle (verified at every driver SF).
-    bcast_state = 24 * n <= supersteps.STATE_BROADCAST_MAX_BYTES
-    # (src, dst, out_degree) fixed for all rounds — computed once, cached,
-    # hash-partitioned so each superstep only moves the (small) rank table,
-    # never the edges.
-    edges_od = (
-        sym.join(out_deg, sym["src"] == out_deg["vertex"])
-        .select("src", "dst", "out_degree")
-        .repartition(n_part, "dst" if bcast_state else "src")
-        .cache()
-    )
-
-    init = verts.select("vertex", F.lit(1.0 / n).alias("rank"))
+    walk = _Walk(spark, canonical)
+    n = max(walk.n, 1)  # an edge-less graph ranks no vertex: avoid 1/0
     base = (1.0 - damping) / n
-
-    def step(state: DataFrame, i: int) -> DataFrame:
-        # On the symmetrized graph every vertex has an incoming edge, so the
-        # contribution aggregate already yields one row per vertex — no
-        # dangling-vertex left join is needed (one fewer join per round).
-        return (
-            edges_od.join(
-                F.broadcast(state) if bcast_state else state,
-                edges_od["src"] == state["vertex"],
-            )
-            .select(F.col("dst").alias("vertex"), (F.col("rank") / F.col("out_degree")).alias("c"))
-            .groupBy("vertex")
-            .agg((F.lit(base) + F.lit(damping) * F.sum("c")).alias("rank"))
-        )
 
     delta_fn = None
     if tolerance is not None:
@@ -92,10 +91,14 @@ def pagerank_run(
                 .collect()[0]["d"]
             )
 
-    run = supersteps.iterate(
-        spark,
-        init,
-        step,
+    return walk.run(
+        walk.verts.select("vertex", F.lit(1.0 / n).alias("rank")),
+        # every vertex of the symmetrized graph has an incoming edge, so
+        # the contribution aggregate already yields one row per vertex — no
+        # dangling-vertex left join is needed
+        lambda contrib: contrib.select(
+            "vertex", (F.lit(base) + F.lit(damping) * F.col("c")).alias("rank")
+        ),
         max_iterations=n_iterations,
         delta_fn=delta_fn,
         tolerance=tolerance or 0.0,
@@ -107,7 +110,6 @@ def pagerank_run(
         # delta_fn.
         checkpoint_every=1 if tolerance is not None else n_iterations,
     )
-    return supersteps.finalize(run, out_deg, edges_od)
 
 
 def pagerank(
@@ -149,72 +151,35 @@ def personalized_pagerank_run(
     0 elsewhere; init rank = s; update
     rank(v) = (1-d)·s(v) + d·Σ_{u∈N(v)} rank(u)/out_degree(u).
 
-    Plan shape matches `pagerank_run`: edges+degrees computed once, cached,
-    hash-partitioned on the join key; each superstep shuffles only the
-    vertex-sized rank table. The teleport join keys on the same vertex
-    hash partitioning the contribution aggregate already produced, and the
-    seed frame is broadcast — per-round cost is identical to uniform
-    PageRank plus one co-partitioned join."""
-    n_part = spark.sparkContext.defaultParallelism
-    sym = prep.symmetrize(canonical)
-    # out-degree table doubles as the vertex set (every vertex of the
-    # symmetrized graph has out-degree >= 1) — same r7 rewrite as
-    # pagerank_run: one fewer full distinct pass per run.
-    out_deg = (
-        sym.groupBy(F.col("src").alias("vertex"))
-        .agg(F.count(F.lit(1)).alias("out_degree"))
-        .cache()
-    )
-    # |V| gates the broadcast-state plan (as in pagerank_run); the count
-    # also materializes the out_deg cache that edges_od reuses below
-    n_v = out_deg.count()
-    bcast_state = 24 * n_v <= supersteps.STATE_BROADCAST_MAX_BYTES
-    verts = out_deg.select("vertex")
+    Plan shape matches `pagerank_run` (the same walk) plus one teleport
+    join per round: it keys on the same vertex hash partitioning the
+    contribution aggregate already produced, so it adds no exchange."""
+    walk = _Walk(spark, canonical)
     if seeds is None:
-        seeds = verts.orderBy("vertex").limit(n_seeds)
+        seeds = walk.verts.orderBy("vertex").limit(n_seeds)
     k = seeds.count()
     if k == 0:
+        walk.out_deg.unpersist()
         raise ValueError("personalized_pagerank needs a non-empty seed set")
     # teleport vector, computed once: tiny seed frame broadcast against the
     # cached vertex table, then pinned on the superstep join partitioning
     verts_s = (
-        verts.join(
+        walk.verts.join(
             F.broadcast(seeds.select("vertex", F.lit(1.0 / k).alias("s"))),
             "vertex",
             "left",
         )
         .select("vertex", F.coalesce("s", F.lit(0.0)).alias("s"))
-        .repartition(n_part, "vertex")
-        .cache()
-    )
-    edges_od = (
-        sym.join(out_deg, sym["src"] == out_deg["vertex"])
-        .select("src", "dst", "out_degree")
-        .repartition(n_part, "dst" if bcast_state else "src")
+        .repartition(spark.sparkContext.defaultParallelism, "vertex")
         .cache()
     )
     # no cache-priming count() actions for edges_od/verts_s (r7): the
     # loop's first round materializes both caches anyway — rounds are
     # sequential, so there is no duplicate-build race to guard against
 
-    init = verts_s.select("vertex", F.col("s").alias("rank"))
-
-    def step(state: DataFrame, i: int) -> DataFrame:
-        contrib = (
-            edges_od.join(
-                F.broadcast(state) if bcast_state else state,
-                edges_od["src"] == state["vertex"],
-            )
-            .select(
-                F.col("dst").alias("vertex"),
-                (F.col("rank") / F.col("out_degree")).alias("c"),
-            )
-            .groupBy("vertex")
-            .agg(F.sum("c").alias("c"))
-        )
+    def teleport(contrib: DataFrame) -> DataFrame:
         # left join keeps zero-contribution vertices (a seeded walk can
-        # leave far vertices at exactly d·0 + (1-d)·0); both sides are
-        # hash-partitioned on vertex so this adds no exchange
+        # leave far vertices at exactly d·0 + (1-d)·0)
         return verts_s.join(contrib, "vertex", "left").select(
             "vertex",
             (
@@ -223,17 +188,16 @@ def personalized_pagerank_run(
             ).alias("rank"),
         )
 
-    run = supersteps.iterate(
-        spark,
-        init,
-        step,
+    return walk.run(
+        verts_s.select("vertex", F.col("s").alias("rank")),
+        teleport,
+        helpers=(verts_s,),
         max_iterations=n_iterations,
         checkpoint_dir=checkpoint_dir,
         # linear lazy chain (state feeds each round once): cut at the end
         # only, as in pagerank_run (r7)
         checkpoint_every=n_iterations,
     )
-    return supersteps.finalize(run, out_deg, verts_s, edges_od)
 
 
 def personalized_pagerank(

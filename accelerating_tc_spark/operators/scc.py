@@ -60,13 +60,13 @@ def _reachers(
     collapse. Raises if max_iterations is hit before the fixpoint."""
     # the state is exactly |verts| rows, and callers pass verts already
     # materialized (cutter.cut) — gate the broadcast-state plan on it
-    bcast_state = 24 * verts.count() <= supersteps.STATE_BROADCAST_MAX_BYTES
+    plan = supersteps.state_plan(24 * verts.count())
     return supersteps.min_label_fixpoint(
         spark,
         edges,
         verts,
         lambda rel: verts.select("vertex", F.col("vertex").alias("label")),
-        bcast_state,
+        plan,
         max_iterations,
     ).state
 

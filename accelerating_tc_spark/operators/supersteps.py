@@ -3,9 +3,14 @@
 Generalizes the reference's A-direction peeling loop (frontier rounds of
 degree updates, edge_directing/A-direction.cpp:84-146; SURVEY.md G2) into a
 reusable `iterate()` that PageRank / connected components / label
-propagation / k-core / SCC all share. Two loop bodies live here too:
-`min_label_fixpoint` (CC and both SCC phases) and `monotone_sum_probe`
-(the convergence probe of CC, SCC and k-core).
+propagation / k-core / SCC / HITS all share. This module owns:
+- the loop itself: checkpoints, lineage metrics, resume, bounded lineage
+  cuts, and the release of the loop's cached helper relations when the
+  loop ends (`iterate(helpers=...)`);
+- the broadcast-state plan decision (`state_plan`): the gate, the
+  partitioning key of the cached loop relation and the state broadcast;
+- two shared loop bodies: `min_label_fixpoint` (CC and both SCC phases)
+  and `monotone_sum_probe` (the convergence probe of CC, SCC and k-core).
 
 Scale/correctness posture:
 - every superstep's state is persisted (parquet dir per iteration — the
@@ -26,7 +31,7 @@ import os
 import shutil
 import time
 import warnings
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,9 +39,9 @@ from pyspark.sql import functions as F
 
 from ..sources import snapshots
 
-# Broadcast-state fast path cap for iterative vertex programs (labelprop,
-# components): when the graph is small enough that the per-round vertex
-# state comfortably broadcasts (|V| <= 2|E|, ~16-24 B/row), the loop
+# Broadcast-state fast path cap for iterative vertex programs (every
+# `state_plan` caller): when the graph is small enough that the per-round
+# vertex state comfortably broadcasts (|V| <= 2|E|, ~16-24 B/row), the loop
 # relation is partitioned by dst and the state shipped as an explicit
 # broadcast — every per-round aggregate then runs exchange-free. Above the
 # cap the classic plan (relation partitioned by src, state shuffled to the
@@ -49,9 +54,41 @@ STATE_BROADCAST_MAX_BYTES = int(
     os.environ.get("SPARK_GRAFT_STATE_BROADCAST_MAX_MB", "64")
 ) << 20
 
+# Consecutive localCheckpoint lineage cuts `iterate` allows before a
+# parquet round-trip hard cut (the chained-localCheckpoint cliff, see
+# LineageCutter; measured on a 100k-edge k-core loop: 0.7 s rounds reach
+# 80 s+ by round 22 without it, a parquet-cut chain is flat for 100+ rounds).
+HARD_CUT_EVERY = 8
 
-def broadcast_state_ok(n_edges: int | None) -> bool:
-    return n_edges is not None and 32 * n_edges <= STATE_BROADCAST_MAX_BYTES
+
+@dataclass(frozen=True)
+class StatePlan:
+    """A vertex program's side of the broadcast-state gate: the cached loop
+    relation is partitioned by dst, the key every per-round aggregate groups
+    on, and the state ships as an explicit broadcast; or, classic, the
+    relation is partitioned by src, the join key, and the state shuffles."""
+
+    broadcast: bool
+
+    def relation(self, rel: DataFrame) -> DataFrame:
+        """`rel` partitioned for the loop and cached: an `iterate` helper."""
+        n_part = rel.sparkSession.sparkContext.defaultParallelism
+        return rel.repartition(n_part, "dst" if self.broadcast else "src").cache()
+
+    def state(self, df: DataFrame) -> DataFrame:
+        return F.broadcast(df) if self.broadcast else df
+
+    def min_neighbor(self, rel: DataFrame, label: str) -> DataFrame:
+        """Round 1 of a min-label program from the identity labeling over a
+        SYMMETRIC relation, grouped on its partitioning key (exchange-free)."""
+        key, nbr = ("dst", "src") if self.broadcast else ("src", "dst")
+        return rel.groupBy(F.col(key).alias("vertex")).agg(F.min(nbr).alias(label))
+
+
+def state_plan(state_bytes: int) -> StatePlan:
+    """The plan for a state of at most `state_bytes`; a budget of 0
+    disables the fast path even for an empty state."""
+    return StatePlan(0 < STATE_BROADCAST_MAX_BYTES and state_bytes <= STATE_BROADCAST_MAX_BYTES)
 
 
 @dataclass
@@ -70,37 +107,6 @@ class SuperstepRun:
     iterations: int
     converged: bool
     metrics: list[IterationMetrics] = field(default_factory=list)
-    # True when `state` is already lineage-cut AND materialized (an eager
-    # localCheckpoint or a parquet snapshot produced it) — finalize() can
-    # then skip its re-anchoring checkpoint, saving one job per run.
-    state_is_cut: bool = False
-
-
-def finalize(run: SuperstepRun, *helpers: DataFrame) -> SuperstepRun:
-    """Pin `run.state` independent of loop-helper relations, then release
-    the helpers' caches.
-
-    Iterative operators cache per-loop relations (edge+degree tables etc.)
-    that the returned state may still reference lazily (rounds after the
-    last lineage cut). Without this, every call leaks one cached helper
-    set for the session's lifetime — a repeated-pass caller (bench
-    protocol, notebook) accumulates them. The eager localCheckpoint
-    materializes the (vertex-sized, small) state once so the unpersist
-    cannot force a recompute from cold sources later. When the loop
-    already left the state cut+materialized (`state_is_cut`, the common
-    case: the last round of every mode ends in an eager localCheckpoint or
-    a snapshot read-back), that checkpoint would be a redundant extra job
-    per run and is skipped (r7)."""
-    state = run.state if run.state_is_cut else run.state.localCheckpoint(eager=True)
-    for h in helpers:
-        h.unpersist()
-    return SuperstepRun(
-        state=state,
-        iterations=run.iterations,
-        converged=run.converged,
-        metrics=run.metrics,
-        state_is_cut=True,
-    )
 
 
 def _partition_histogram(df: DataFrame) -> dict[str, int]:
@@ -125,8 +131,8 @@ def latest_checkpoint(checkpoint_dir: str) -> int | None:
 
 class LineageCutter:
     """Bounded-chain lineage cuts for hand-rolled loops (the same cliff
-    `iterate(hard_cut_every=...)` guards against: chains of ~15+
-    consecutive localCheckpoints degrade geometrically on Spark 4.1).
+    HARD_CUT_EVERY guards `iterate` against: chains of ~15+ consecutive
+    localCheckpoints degrade geometrically on Spark 4.1).
 
     Up to `every - 1` consecutive cuts use localCheckpoint; the next cut is
     a parquet round-trip through a scratch slot. Slots get UNIQUE names and
@@ -190,10 +196,9 @@ def iterate(
     tolerance: float = 0.0,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 1,
-    resume: bool = True,
     on_nonconverged: str = "warn",
-    hard_cut_every: int = 8,
     keep_checkpoints: int | None = None,
+    helpers: Sequence[DataFrame] = (),
 ) -> SuperstepRun:
     """Run `state <- step(state, i)` with checkpointing, lineage metrics, resume.
 
@@ -201,156 +206,156 @@ def iterate(
       it is <= tolerance. None -> always run max_iterations (deterministic
       fixed-round mode, used when an unrolled SQL oracle must match).
     - `checkpoint_dir`: parquet snapshot per kept iteration + lineage.jsonl.
-      With resume=True a rerun continues from the latest complete snapshot.
+      A rerun continues from the latest complete snapshot. The HARD_CUT_EVERY
+      parquet hard cut writes under it too, else to a process-local scratch
+      dir (tempfile) that is removed when the loop ends — on a multi-node
+      cluster pass `checkpoint_dir` on shared storage for loops expected to
+      exceed ~15 rounds so the hard cut lands somewhere all executors and
+      any resuming driver can read.
     - `on_nonconverged`: what to do when max_iterations is hit with a delta_fn
       still above tolerance — "warn" (default), "raise" (exact-semantics
       operators: returning a non-fixpoint state would be silently wrong), or
       "ignore".
-    - `hard_cut_every`: maximum consecutive localCheckpoint lineage cuts
-      before a parquet round-trip hard cut. Long chains of localCheckpoints
-      degrade GEOMETRICALLY on Spark 4.1 (measured: per-round wall flat for
-      ~15 chained cuts, then ×2.5 per round — 0.7s rounds reach 80s+ by
-      round 22 on a 100k-edge k-core loop; a parquet-cut chain is flat for
-      100+ rounds on the same job), so any convergence loop that can run
-      tens of rounds MUST bound the chain. The hard cut writes to
-      `checkpoint_dir` when given, else to a process-local scratch dir
-      (tempfile) that is removed when the loop ends — on a multi-node
-      cluster pass `checkpoint_dir` on shared storage for loops expected to
-      exceed ~15 rounds so the hard cut lands somewhere all executors and
-      any resuming driver can read.
     - `keep_checkpoints`: retention bound for the checkpoint dir (>= 2) —
       after each committed round, iteration snapshots older than the newest
       `keep_checkpoints` are dropped (snapshots.ParquetIterationLog.prune;
       Iceberg's expire_snapshots in the swap). None keeps every round.
-      Resume still works: it continues from the newest surviving snapshot."""
+      Resume still works: it continues from the newest surviving snapshot.
+    - `helpers`: the loop's cached relations (edge+degree tables etc.). They
+      are unpersisted when the loop ends, normally or by an exception;
+      without this every call would leak one cached helper set for the
+      session's lifetime. The returned state is first pinned independent
+      of them: it is already lineage-cut and materialized unless no round
+      ran, and then one eager localCheckpoint materializes it so the
+      unpersist cannot force a recompute from cold sources later."""
     import tempfile
 
-    metrics: list[IterationMetrics] = []
-    start_iter = 0
-    state = initial
-    state_cut = False  # True while `state` is lineage-cut AND materialized
-    scratch_dir: str | None = None
-    chain_len = 0  # consecutive localCheckpoint cuts since the last hard cut
+    try:
+        metrics: list[IterationMetrics] = []
+        start_iter = 0
+        state = initial
+        scratch_dir: str | None = None
+        chain_len = 0  # consecutive localCheckpoint cuts since the last hard cut
 
-    ckpt_log = None
-    if checkpoint_dir:
-        os.makedirs(checkpoint_dir, exist_ok=True)
-        # checkpoint mechanics live in the table-format seam: swapping
-        # parquet-iter-dirs for Iceberg snapshots replaces this log class
-        ckpt_log = snapshots.ParquetIterationLog(spark, checkpoint_dir)
-        last = ckpt_log.latest() if resume else None
-        if last is not None:
-            state = ckpt_log.read(last)
-            state_cut = True
-            start_iter = last + 1
+        ckpt_log = None
+        if checkpoint_dir:
+            os.makedirs(checkpoint_dir, exist_ok=True)
+            # checkpoint mechanics live in the table-format seam: swapping
+            # parquet-iter-dirs for Iceberg snapshots replaces this log class
+            ckpt_log = snapshots.ParquetIterationLog(spark, checkpoint_dir)
+            last = ckpt_log.latest()
+            if last is not None:
+                state = ckpt_log.read(last)
+                start_iter = last + 1
 
-    converged = False
-    lineage_path = os.path.join(checkpoint_dir, "lineage.jsonl") if checkpoint_dir else None
+        converged = False
+        lineage_path = os.path.join(checkpoint_dir, "lineage.jsonl") if checkpoint_dir else None
 
-    for i in range(start_iter, max_iterations):
-        t0 = time.time()
-        new_state = step(state, i)
+        for i in range(start_iter, max_iterations):
+            t0 = time.time()
+            new_state = step(state, i)
 
-        state_cut = True
-        if ckpt_log and (i % checkpoint_every == 0 or i == max_iterations - 1):
-            # durable commit + lineage cut: read back the written snapshot
-            persisted = ckpt_log.write(new_state, i)
-            chain_len = 0
-        elif (
-            delta_fn is None
-            and checkpoint_dir is None
-            and i % checkpoint_every != checkpoint_every - 1
-            and i != max_iterations - 1
-        ):
-            # unmetered fixed-round mode: rounds between lineage cuts stay
-            # lazy-chained — skipping the eager materialization removes a
-            # full job per skipped round (the dominant per-round constant
-            # for small states); the plan depth is bounded by
-            # checkpoint_every so Catalyst analysis stays O(1) per round
-            persisted = new_state
-            state_cut = False
-        elif hard_cut_every and chain_len + 1 >= hard_cut_every:
-            # parquet hard cut: bound the localCheckpoint chain (see
-            # hard_cut_every docstring) — alternate two scratch slots so
-            # the slot being overwritten is never the one being read.
-            # With a checkpoint_dir the slots live under it (shared storage
-            # on a cluster — executors must be able to read the cut back);
-            # only dir-less in-memory loops fall back to a local tempdir.
-            if scratch_dir is None:
-                if checkpoint_dir:
-                    scratch_dir = os.path.join(checkpoint_dir, "_scratch")
-                    os.makedirs(scratch_dir, exist_ok=True)
-                else:
-                    scratch_dir = tempfile.mkdtemp(prefix="superstep-scratch-")
-            slot = os.path.join(scratch_dir, f"slot{(i // hard_cut_every) % 2}")
-            new_state.write.mode("overwrite").parquet(slot)
-            persisted = spark.read.parquet(slot)
-            chain_len = 0
-        else:
-            # convergence mode: the delta probe below runs an action on
-            # `persisted` right away, so a LAZY checkpoint lets that single
-            # action materialize the blocks — one job per round instead of
-            # an eager-materialize job plus the probe job (r7; measured on
-            # the SCC inner loop, whose many short rounds are job-overhead
-            # bound). Without a probe the eager cut keeps its job.
-            persisted = new_state.localCheckpoint(eager=delta_fn is None)
-            chain_len += 1
+            if ckpt_log and (i % checkpoint_every == 0 or i == max_iterations - 1):
+                # durable commit + lineage cut: read back the written snapshot
+                persisted = ckpt_log.write(new_state, i)
+                chain_len = 0
+            elif (
+                delta_fn is None
+                and checkpoint_dir is None
+                and i % checkpoint_every != checkpoint_every - 1
+                and i != max_iterations - 1
+            ):
+                # unmetered fixed-round mode: rounds between lineage cuts stay
+                # lazy-chained — skipping the eager materialization removes a
+                # full job per skipped round (the dominant per-round constant
+                # for small states); the plan depth is bounded by
+                # checkpoint_every so Catalyst analysis stays O(1) per round
+                persisted = new_state
+            elif chain_len + 1 >= HARD_CUT_EVERY:
+                # parquet hard cut: bound the localCheckpoint chain (see
+                # HARD_CUT_EVERY) — alternate two scratch slots so
+                # the slot being overwritten is never the one being read.
+                # With a checkpoint_dir the slots live under it (shared storage
+                # on a cluster — executors must be able to read the cut back);
+                # only dir-less in-memory loops fall back to a local tempdir.
+                if scratch_dir is None:
+                    if checkpoint_dir:
+                        scratch_dir = os.path.join(checkpoint_dir, "_scratch")
+                        os.makedirs(scratch_dir, exist_ok=True)
+                    else:
+                        scratch_dir = tempfile.mkdtemp(prefix="superstep-scratch-")
+                slot = os.path.join(scratch_dir, f"slot{(i // HARD_CUT_EVERY) % 2}")
+                new_state.write.mode("overwrite").parquet(slot)
+                persisted = spark.read.parquet(slot)
+                chain_len = 0
+            else:
+                # convergence mode: the delta probe below runs an action on
+                # `persisted` right away, so a LAZY checkpoint lets that single
+                # action materialize the blocks — one job per round instead of
+                # an eager-materialize job plus the probe job (r7; measured on
+                # the SCC inner loop, whose many short rounds are job-overhead
+                # bound). Without a probe the eager cut keeps its job.
+                persisted = new_state.localCheckpoint(eager=delta_fn is None)
+                chain_len += 1
 
-        delta = delta_fn(state, persisted) if delta_fn is not None else None
-        # per-partition lineage histogram: one extra job per round, recorded
-        # only when a checkpoint dir asked for durable lineage — unmetered
-        # in-memory loops (bench hot paths) skip the pass entirely
-        if lineage_path:
-            hist = _partition_histogram(persisted)
-        else:
-            hist = {}
-        m = IterationMetrics(
-            iteration=i,
-            rows=sum(hist.values()),
-            n_partitions=len(hist),
-            partition_rows=hist,
-            wall_s=round(time.time() - t0, 3),
-            delta=delta,
+            delta = delta_fn(state, persisted) if delta_fn is not None else None
+            # per-partition lineage histogram: one extra job per round, recorded
+            # only when a checkpoint dir asked for durable lineage — unmetered
+            # in-memory loops (bench hot paths) skip the pass entirely
+            if lineage_path:
+                hist = _partition_histogram(persisted)
+            else:
+                hist = {}
+            m = IterationMetrics(
+                iteration=i,
+                rows=sum(hist.values()),
+                n_partitions=len(hist),
+                partition_rows=hist,
+                wall_s=round(time.time() - t0, 3),
+                delta=delta,
+            )
+            metrics.append(m)
+            if lineage_path:
+                with open(lineage_path, "a") as fh:
+                    fh.write(json.dumps(m.__dict__) + "\n")
+
+            state = persisted
+            if ckpt_log and keep_checkpoints:
+                # prune AFTER delta_fn ran and `state` was rebound: the old
+                # state frame (previous round's snapshot) is no longer read
+                ckpt_log.prune(keep_checkpoints)
+            if delta is not None and delta <= tolerance:
+                converged = True
+                break
+
+        if delta_fn is not None and not converged and metrics:
+            msg = (
+                f"superstep loop hit max_iterations={max_iterations} with "
+                f"delta={metrics[-1].delta} > tolerance={tolerance}; state is NOT a fixpoint"
+            )
+            if on_nonconverged == "raise":
+                raise RuntimeError(msg)
+            if on_nonconverged == "warn":
+                warnings.warn(msg, RuntimeWarning, stacklevel=2)
+
+        if scratch_dir is not None or (helpers and state is initial):
+            # the final state may be backed by a scratch slot, or be the
+            # uncut initial state over a helper about to be released (every
+            # round that ends a loop cuts): re-anchor it in block storage (a
+            # 1-link localCheckpoint chain is safe)
+            state = state.localCheckpoint(eager=True)
+        if scratch_dir is not None:
+            shutil.rmtree(scratch_dir, ignore_errors=True)
+
+        return SuperstepRun(
+            state=state,
+            iterations=len(metrics) + start_iter,
+            converged=converged,
+            metrics=metrics,
         )
-        metrics.append(m)
-        if lineage_path:
-            with open(lineage_path, "a") as fh:
-                fh.write(json.dumps(m.__dict__) + "\n")
-
-        state = persisted
-        if ckpt_log and keep_checkpoints:
-            # prune AFTER delta_fn ran and `state` was rebound: the old
-            # state frame (previous round's snapshot) is no longer read
-            ckpt_log.prune(keep_checkpoints)
-        if delta is not None and delta <= tolerance:
-            converged = True
-            break
-
-    if delta_fn is not None and not converged and metrics:
-        msg = (
-            f"superstep loop hit max_iterations={max_iterations} with "
-            f"delta={metrics[-1].delta} > tolerance={tolerance}; state is NOT a fixpoint"
-        )
-        if on_nonconverged == "raise":
-            raise RuntimeError(msg)
-        if on_nonconverged == "warn":
-            warnings.warn(msg, RuntimeWarning, stacklevel=2)
-
-    if scratch_dir is not None:
-        # the final state may be backed by a scratch slot: re-anchor it
-        # in block storage (a 1-link localCheckpoint chain is safe) before
-        # removing the scratch dir
-        state = state.localCheckpoint(eager=True)
-        state_cut = True
-        shutil.rmtree(scratch_dir, ignore_errors=True)
-
-    return SuperstepRun(
-        state=state,
-        iterations=len(metrics) + start_iter,
-        converged=converged,
-        metrics=metrics,
-        state_is_cut=state_cut,
-    )
+    finally:
+        for h in helpers:
+            h.unpersist()
 
 
 def monotone_sum_probe(col: str) -> Callable[[DataFrame, DataFrame], float]:
@@ -382,7 +387,7 @@ def min_label_fixpoint(
     edges: DataFrame,
     verts: DataFrame,
     init: Callable[[DataFrame], DataFrame],
-    bcast_state: bool,
+    plan: StatePlan,
     max_iterations: int,
     label: str = "label",
     checkpoint_dir: str | None = None,
@@ -396,39 +401,29 @@ def min_label_fixpoint(
     a vertex that reaches v and only decreases.
 
     Each caller keeps its own plan decision and initial state:
-    - `bcast_state`: integer min aggregates are order-insensitive, so on
-      broadcastable-state graphs the loop relation is partitioned by dst
-      (the per-round grouping key) and the state ships as explicit
-      broadcasts — a round runs with ZERO exchanges. Otherwise the classic
-      plan: relation partitioned by src, only the state shuffles.
+    - `plan`: integer min aggregates are order-insensitive, so either side
+      of the broadcast-state gate gives the same fixpoint.
     - `init(rel)` builds round 0's state from the cached loop relation.
     Self-loops for every vertex are folded into the relation, so min(own,
     incoming-min) is a single aggregate and edge-less vertices stay in the
     state. Raises if max_iterations is hit before the fixpoint."""
-    rel = (
-        edges.union(
-            verts.select(F.col("vertex").alias("src"), F.col("vertex").alias("dst"))
-        )
-        .repartition(spark.sparkContext.defaultParallelism, "dst" if bcast_state else "src")
-        .cache()
+    rel = plan.relation(
+        edges.union(verts.select(F.col("vertex").alias("src"), F.col("vertex").alias("dst")))
     )
-
-    def _st(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if bcast_state else df
 
     def step(state: DataFrame, i: int) -> DataFrame:
         cand = (
-            rel.join(_st(state), rel["src"] == state["vertex"])
+            rel.join(plan.state(state), rel["src"] == state["vertex"])
             .select(F.col("dst").alias("vertex"), F.col(label).alias("nbr_label"))
             .groupBy("vertex")
             .agg(F.min("nbr_label").alias(label))
         )
         jumped = state.select(F.col("vertex").alias(label), F.col(label).alias("jumped"))
-        return cand.join(_st(jumped), label, "left").select(
+        return cand.join(plan.state(jumped), label, "left").select(
             "vertex", F.least(label, F.coalesce("jumped", label)).alias(label)
         )
 
-    run = iterate(
+    return iterate(
         spark,
         init(rel),
         step,
@@ -437,5 +432,5 @@ def min_label_fixpoint(
         tolerance=0.0,
         checkpoint_dir=checkpoint_dir,
         on_nonconverged="raise",  # exact-semantics operator
+        helpers=(rel,),
     )
-    return finalize(run, rel)

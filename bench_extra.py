@@ -188,6 +188,16 @@ def _captured_round2_plan(run_operator) -> str:
         supersteps.iterate = real_iterate
 
 
+def _ppr_round_plan(spark, canonical) -> str:
+    # round 2: the teleport frame is cached but, like the walk's edge
+    # relation, only first materialized by round 1
+    from accelerating_tc_spark.operators import pagerank
+
+    return _captured_round2_plan(
+        lambda: pagerank.personalized_pagerank_run(spark, canonical, n_iterations=10)
+    )
+
+
 def _kcore_round_plan(spark, canonical) -> str:
     from accelerating_tc_spark.operators import kcore
 
@@ -230,13 +240,15 @@ def _bfs_round_plan(spark, canonical) -> str:
 
 
 def capture_iter_plans(outdir: str, suffix: str) -> None:
-    """Round plans for the non-headline iterative operators the r7 round
-    touched (kcore h-index, SCC min-label fixpoint, BFS frontier expand) —
-    captured from the operators' own code paths like capture_plans."""
+    """Round plans for the non-headline iterative operators (personalized
+    PageRank's seeded walk, kcore h-index, SCC min-label fixpoint, BFS
+    frontier expand) — captured from the operators' own code paths like
+    capture_plans."""
     spark = _spark()
     try:
         canonical, _ = _graph(spark)
         plans = {
+            "personalized_pagerank_round": _ppr_round_plan(spark, canonical),
             "core_numbers_round": _kcore_round_plan(spark, canonical),
             "scc_fixpoint_round": _scc_round_plan(spark, canonical),
             "bfs_distances_round": _bfs_round_plan(spark, canonical),

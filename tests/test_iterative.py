@@ -8,6 +8,7 @@ import pytest
 
 from accelerating_tc_spark.operators import (
     components,
+    hits,
     kcore,
     labelprop,
     pagerank,
@@ -191,6 +192,105 @@ def classic_plan(monkeypatch):
     tests run the broadcast-state plan; a zero budget forces the classic
     (relation partitioned by src, state shuffled) plan."""
     monkeypatch.setattr(supersteps, "STATE_BROADCAST_MAX_BYTES", 0)
+
+
+def test_state_plan_zero_budget_disables_broadcast(monkeypatch):
+    """SPARK_GRAFT_STATE_BROADCAST_MAX_MB=0 is an exact kill switch: even a
+    0-byte state (an empty graph) takes the classic plan."""
+    monkeypatch.setattr(supersteps, "STATE_BROADCAST_MAX_BYTES", 0)
+    assert not supersteps.state_plan(0).broadcast
+    monkeypatch.setattr(supersteps, "STATE_BROADCAST_MAX_BYTES", 1 << 20)
+    assert supersteps.state_plan(0).broadcast
+    assert supersteps.state_plan(1 << 20).broadcast
+    assert not supersteps.state_plan((1 << 20) + 1).broadcast
+
+
+# Degenerate inputs x vertex programs x both sides of the state-broadcast
+# gate. Wide ids map v -> 2^31 + v·(2^33+1): past the LP packed argmax.
+_WIDE_OFF, _WIDE_STRIDE = 1 << 31, (1 << 33) + 1
+_K4_PENDANT = [(0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3), (3, 4)]
+DEGENERATE = {
+    "empty": [],
+    "one_edge": [(3, 7)],
+    "self_loops_only": [(0, 0), (1, 1), (2, 2)],
+    "duplicate_and_mirrored": [
+        (0, 1), (1, 0), (0, 1), (1, 2), (2, 1), (2, 0), (0, 2), (2, 3), (3, 2), (3, 3),
+    ],
+    "two_components": [(0, 1), (1, 2), (0, 2), (10, 11), (11, 12), (12, 13)],
+    "ids_ge_2_31": [
+        (_WIDE_OFF + a * _WIDE_STRIDE, _WIDE_OFF + b * _WIDE_STRIDE) for a, b in _K4_PENDANT
+    ],
+}
+# name: (call returning the (vertex, col) state, col, oracle)
+VERTEX_PROGRAMS = {
+    "pagerank": (
+        lambda spark, c: pagerank.pagerank(spark, c, n_iterations=10), "rank", numpy_pagerank
+    ),
+    "personalized_pagerank": (
+        lambda spark, c: pagerank.personalized_pagerank(spark, c, n_iterations=10),
+        "rank",
+        numpy_personalized_pagerank,
+    ),
+    "connected_components": (components.connected_components, "component", python_components),
+    "label_propagation": (
+        lambda spark, c: labelprop.label_propagation(spark, c, n_iterations=5),
+        "label",
+        python_label_prop,
+    ),
+    "core_numbers": (kcore.core_numbers, "core", python_core_numbers),
+}
+
+
+@pytest.mark.parametrize("plan", ["broadcast_state", "classic"])
+@pytest.mark.parametrize("program", sorted(VERTEX_PROGRAMS))
+@pytest.mark.parametrize("case", sorted(DEGENERATE))
+def test_vertex_programs_degenerate_inputs(spark, request, monkeypatch, case, program, plan):
+    if plan == "classic":
+        request.getfixturevalue("classic_plan")
+    taken = []
+    real_plan = supersteps.state_plan
+    monkeypatch.setattr(
+        supersteps, "state_plan", lambda b: taken.append(real_plan(b)) or taken[-1]
+    )
+    pairs = DEGENERATE[case]
+    run, col, oracle = VERTEX_PROGRAMS[program]
+    canonical = prep.canonicalize_edges(synthetic.edges_df(spark, pairs))
+    if not _clean_pairs(pairs) and program == "personalized_pagerank":
+        with pytest.raises(ValueError, match="non-empty seed set"):
+            run(spark, canonical)
+        return
+    got = {r["vertex"]: r[col] for r in run(spark, canonical).collect()}
+    expected = oracle(pairs) if _clean_pairs(pairs) else {}
+    assert set(got) == set(expected)
+    for v, want in expected.items():
+        assert got[v] == pytest.approx(want, rel=0, abs=1e-9), v
+    assert taken and all(p.broadcast == (plan == "broadcast_state") for p in taken)
+
+
+# every call that caches loop relations; each must release them all
+CACHING_CALLS = {
+    "pagerank_run": lambda spark, c: pagerank.pagerank_run(spark, c, n_iterations=3),
+    "personalized_pagerank_run": lambda spark, c: pagerank.personalized_pagerank_run(
+        spark, c, n_iterations=3
+    ),
+    "connected_components_run": components.connected_components_run,
+    "label_propagation_run": lambda spark, c: labelprop.label_propagation_run(
+        spark, c, n_iterations=3
+    ),
+    "core_numbers": kcore.core_numbers,
+    "hits_run": lambda spark, c: hits.hits_run(spark, c, n_iterations=3),
+}
+
+
+@pytest.mark.parametrize("call", sorted(CACHING_CALLS))
+def test_no_dataframe_cache_outlives_the_call(spark, graph, call):
+    """Compared through the session's cache manager: a cache the call
+    registers and keeps leaks for the session's lifetime."""
+    _, canonical = graph
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    before = cache_manager.numCachedEntries()
+    CACHING_CALLS[call](spark, canonical)
+    assert cache_manager.numCachedEntries() == before
 
 
 def test_connected_components_exact(spark, graph):
