@@ -13,15 +13,23 @@ propagation / k-core / SCC / HITS all share. This module owns:
   and `monotone_sum_probe` (the convergence probe of CC, SCC and k-core).
 
 Scale/correctness posture:
-- every superstep's state is persisted (parquet dir per iteration — the
-  sandbox stand-in for an Iceberg snapshot; the write is atomic via Spark's
-  _SUCCESS marker) so any run is resumable mid-iteration,
-- a `lineage` metrics file records per-iteration row counts, per-partition
-  row distribution (spark_partition_id), wall time, and the convergence
-  delta — the "per-partition lineage + metrics" of the north rule,
-- lineage is CUT every round (reload from the checkpoint we just wrote, or
-  localCheckpoint when unpersisted) so Catalyst plans don't grow with the
-  iteration count — the classic iterative-Spark failure mode.
+- under a `checkpoint_dir`, every `checkpoint_every`-th round and the last
+  one are committed (parquet dir per committed round — the sandbox
+  stand-in for an Iceberg snapshot; the write is atomic via Spark's
+  _SUCCESS marker and a rename), so a run resumes from its newest commit.
+  Rounds between commits follow the dir-less rule: lazy when unmetered,
+  else cut in memory, since a crash resumes from the last commit anyway;
+- a `lineage.jsonl` file records one line per round: wall time, the
+  convergence delta and, for committed rounds only, the row count per
+  write partition, read from the snapshot's parquet footers without a
+  Spark job (uncommitted rounds record `rows: null`);
+- a committed round costs its write alone: the read-back uses the known
+  schema (no footer-inference job) and a `monotone_sum_probe` observes its
+  sum on the write itself (`DataFrame.observe`) instead of running an
+  aggregate;
+- lineage is cut at every commit and at every metered round, and at least
+  every `checkpoint_every` rounds otherwise, so Catalyst plans do not grow
+  with the iteration count — the classic iterative-Spark failure mode.
 """
 
 from __future__ import annotations
@@ -34,7 +42,7 @@ import warnings
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import snapshots
@@ -93,10 +101,13 @@ def state_plan(state_bytes: int) -> StatePlan:
 
 @dataclass
 class IterationMetrics:
+    """One round's lineage record; the row counts are those of a committed
+    round's snapshot and None for a round that was not committed."""
+
     iteration: int
-    rows: int
-    n_partitions: int
-    partition_rows: dict[str, int]
+    rows: int | None
+    n_partitions: int | None
+    partition_rows: dict[str, int] | None
     wall_s: float
     delta: float | None
 
@@ -107,15 +118,6 @@ class SuperstepRun:
     iterations: int
     converged: bool
     metrics: list[IterationMetrics] = field(default_factory=list)
-
-
-def _partition_histogram(df: DataFrame) -> dict[str, int]:
-    rows = (
-        df.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    return {str(r["pid"]): r["n"] for r in rows}
 
 
 def latest_checkpoint(checkpoint_dir: str) -> int | None:
@@ -160,7 +162,7 @@ class LineageCutter:
             slot = os.path.join(self.scratch, f"slot{self.n_cuts:05d}")
             df.write.mode("overwrite").parquet(slot)
             self.chain = 0
-            return self.spark.read.parquet(slot)
+            return self.spark.read.schema(df.schema).parquet(slot)
         self.chain += 1
         return df.localCheckpoint(eager=True)
 
@@ -204,9 +206,12 @@ def iterate(
 
     - `delta_fn(old, new) -> float`: convergence measure; iteration stops when
       it is <= tolerance. None -> always run max_iterations (deterministic
-      fixed-round mode, used when an unrolled SQL oracle must match).
-    - `checkpoint_dir`: parquet snapshot per kept iteration + lineage.jsonl.
-      A rerun continues from the latest complete snapshot. The HARD_CUT_EVERY
+      fixed-round mode, used when an unrolled SQL oracle must match). A
+      delta_fn with an `observe(df) -> df` method (monotone_sum_probe) has
+      each committed round's write observe what it needs.
+    - `checkpoint_dir`: parquet snapshot of every `checkpoint_every`-th
+      round and of the last one, plus lineage.jsonl. A rerun continues from
+      the newest committed round below max_iterations. The HARD_CUT_EVERY
       parquet hard cut writes under it too, else to a process-local scratch
       dir (tempfile) that is removed when the loop ends — on a multi-node
       cluster pass `checkpoint_dir` on shared storage for loops expected to
@@ -243,10 +248,12 @@ def iterate(
             # checkpoint mechanics live in the table-format seam: swapping
             # parquet-iter-dirs for Iceberg snapshots replaces this log class
             ckpt_log = snapshots.ParquetIterationLog(spark, checkpoint_dir)
-            last = ckpt_log.latest()
-            if last is not None:
-                state = ckpt_log.read(last)
-                start_iter = last + 1
+            # resume from the newest commit this run reaches: rounds at or
+            # past max_iterations were left by a longer run
+            done = [j for j in ckpt_log.completed() if j < max_iterations]
+            if done:
+                state = ckpt_log.read(done[-1])
+                start_iter = done[-1] + 1
 
         converged = False
         lineage_path = os.path.join(checkpoint_dir, "lineage.jsonl") if checkpoint_dir else None
@@ -255,13 +262,17 @@ def iterate(
             t0 = time.time()
             new_state = step(state, i)
 
+            hist = None
             if ckpt_log and (i % checkpoint_every == 0 or i == max_iterations - 1):
-                # durable commit + lineage cut: read back the written snapshot
-                persisted = ckpt_log.write(new_state, i)
+                # durable commit + lineage cut: read back the written
+                # snapshot. A probe that can observe its sum on the write
+                # (monotone_sum_probe) gets it from this same job.
+                observe = getattr(delta_fn, "observe", None)
+                persisted = ckpt_log.write(observe(new_state) if observe else new_state, i)
+                hist = ckpt_log.partition_rows(i)
                 chain_len = 0
             elif (
                 delta_fn is None
-                and checkpoint_dir is None
                 and i % checkpoint_every != checkpoint_every - 1
                 and i != max_iterations - 1
             ):
@@ -269,7 +280,9 @@ def iterate(
                 # lazy-chained — skipping the eager materialization removes a
                 # full job per skipped round (the dominant per-round constant
                 # for small states); the plan depth is bounded by
-                # checkpoint_every so Catalyst analysis stays O(1) per round
+                # checkpoint_every so Catalyst analysis stays O(1) per round.
+                # Under a checkpoint_dir such a round buys no durability by
+                # being cut: a crash resumes from the last commit either way.
                 persisted = new_state
             elif chain_len + 1 >= HARD_CUT_EVERY:
                 # parquet hard cut: bound the localCheckpoint chain (see
@@ -286,7 +299,7 @@ def iterate(
                         scratch_dir = tempfile.mkdtemp(prefix="superstep-scratch-")
                 slot = os.path.join(scratch_dir, f"slot{(i // HARD_CUT_EVERY) % 2}")
                 new_state.write.mode("overwrite").parquet(slot)
-                persisted = spark.read.parquet(slot)
+                persisted = spark.read.schema(new_state.schema).parquet(slot)
                 chain_len = 0
             else:
                 # convergence mode: the delta probe below runs an action on
@@ -299,17 +312,10 @@ def iterate(
                 chain_len += 1
 
             delta = delta_fn(state, persisted) if delta_fn is not None else None
-            # per-partition lineage histogram: one extra job per round, recorded
-            # only when a checkpoint dir asked for durable lineage — unmetered
-            # in-memory loops (bench hot paths) skip the pass entirely
-            if lineage_path:
-                hist = _partition_histogram(persisted)
-            else:
-                hist = {}
             m = IterationMetrics(
                 iteration=i,
-                rows=sum(hist.values()),
-                n_partitions=len(hist),
+                rows=None if hist is None else sum(hist.values()),
+                n_partitions=None if hist is None else len(hist),
                 partition_rows=hist,
                 wall_s=round(time.time() - t0, 3),
                 delta=delta,
@@ -358,28 +364,48 @@ def iterate(
             h.unpersist()
 
 
+class _SumProbe:
+    """`monotone_sum_probe`'s delta_fn. `observe(df)` attaches the sum to
+    the action that next runs over `df` (`iterate`'s commit write), and the
+    next call takes it from there instead of running its own aggregate."""
+
+    def __init__(self, col: str):
+        self.col = col
+        self.prev = None
+        self.pending: Observation | None = None
+
+    def _expr(self):
+        return F.sum(F.col(self.col).cast("decimal(38,0)")).alias("s")
+
+    def observe(self, df: DataFrame) -> DataFrame:
+        self.pending = Observation()
+        return df.observe(self.pending, self._expr())
+
+    def _sum(self, df: DataFrame):
+        return df.agg(self._expr()).first()["s"]
+
+    def __call__(self, old: DataFrame, new: DataFrame) -> float:
+        if self.prev is None:
+            self.prev = self._sum(old) or 0
+        if self.pending is not None:
+            s, self.pending = self.pending.get["s"], None
+        else:
+            s = self._sum(new)
+        s = s or 0  # an empty state sums to null
+        d = float(self.prev - s)
+        self.prev = s
+        return d
+
+
 def monotone_sum_probe(col: str) -> Callable[[DataFrame, DataFrame], float]:
     """Convergence `delta_fn` for a state column that only ever decreases
     (min labels, h-index core estimates): the state is a fixpoint iff
     sum(col) is unchanged, so one tiny aggregate per round over the
     just-materialized state replaces a two-sided join + changed-row count
-    (r7). The previous round's sum is memoized; decimal(38) is exact for
-    any long values."""
-    prev_sum: list = [None]
-
-    def col_sum(df: DataFrame):
-        s = df.agg(F.sum(F.col(col).cast("decimal(38,0)")).alias("s")).first()["s"]
-        return s if s is not None else 0
-
-    def delta_fn(old: DataFrame, new: DataFrame) -> float:
-        if prev_sum[0] is None:
-            prev_sum[0] = col_sum(old)
-        s = col_sum(new)
-        d = float(prev_sum[0] - s)
-        prev_sum[0] = s
-        return d
-
-    return delta_fn
+    (r7); on a committed round the sum rides on the snapshot write instead.
+    The previous round's sum is memoized; decimal(38) is exact for any long
+    values."""
+    return _SumProbe(col)
 
 
 def min_label_fixpoint(

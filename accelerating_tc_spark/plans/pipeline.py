@@ -3,10 +3,12 @@
 pages -> extract_links -> URL dense-ID compaction -> canonical edge table
 -> blocked triangle count + PageRank + connected components, with the
 pages->edges boundary committed through the table-format seam
-(sources/snapshots) and the iterative stages checkpointed per superstep.
+(sources/snapshots) and the iterative stages' supersteps checkpointed.
 A crashed run resumes from the last completed stage: once the edge table
 is committed, a rerun NEVER re-reads the page source (the corpus argument
-is a thunk precisely so resume can prove it was never called).
+is a thunk precisely so resume can prove it was never called). The last
+stage commits the summary table itself (`summary_pr<pr_iterations>`), so a
+rerun of a completed pipeline only reads it back.
 
 Every piece is an existing oracle-green operator; this module is the glue
 the north rule actually describes (edge extraction feeding the iterative
@@ -43,8 +45,20 @@ def web_graph_pipeline(
     Stage 1 (pages -> edges) commits the canonical dense-ID edge table and
     the url mapping under `work_dir` (completeness = the edge table's
     _SUCCESS marker, written last); `corpus_fn` is only invoked when that
-    commit is absent. Stages 2-3 (PageRank / components) checkpoint each
-    superstep under `work_dir` so a rerun resumes mid-iteration."""
+    commit is absent. The canonical edge table is cached once for the
+    triangle count and both loops. Stages 2-3 (PageRank / components)
+    checkpoint their supersteps under `work_dir` so a rerun resumes
+    mid-iteration. The summary is committed under `work_dir` too, keyed by
+    `pr_iterations`: a rerun that finds it complete returns it without
+    touching the corpus, the edges, the triangle count or either loop.
+
+    The returned frame reads the committed summary's files under
+    `work_dir`: consume (collect, write or localCheckpoint) it before
+    deleting the dir."""
+    summary_path = os.path.join(work_dir, f"summary_pr{pr_iterations}")
+    if snapshots.is_complete(summary_path):
+        return snapshots.read_table(spark, summary_path)
+
     edges_path = os.path.join(work_dir, "edges")
     mapping_path = os.path.join(work_dir, "url_mapping")
     if not snapshots.is_complete(edges_path):
@@ -54,30 +68,34 @@ def web_graph_pipeline(
         snapshots.write_table(mapping, mapping_path)
         snapshots.write_table(edges, edges_path)
 
-    canonical = prep.canonicalize_edges(snapshots.read_table(spark, edges_path))
-    n_edges = canonical.count()
-    tri = triangles.triangle_count_blocked(prep.orient_by_degree(canonical)).first()[
-        "triangles"
-    ]
-    pr = pagerank.pagerank(
-        spark,
-        canonical,
-        n_iterations=pr_iterations,
-        checkpoint_dir=os.path.join(work_dir, "pr_ckpt"),
-    )
-    cc = components.connected_components(
-        spark,
-        canonical,
-        max_iterations=cc_max_iterations,
-        checkpoint_dir=os.path.join(work_dir, "cc_ckpt"),
-    )
-    return (
-        pr.join(cc, "vertex")
-        .select(
-            "vertex",
-            F.round("rank", 6).alias("rank"),
-            "component",
-            F.lit(int(tri)).cast("long").alias("triangles"),
-            F.lit(int(n_edges)).cast("long").alias("n_edges"),
+    canonical = prep.canonicalize_edges(snapshots.read_table(spark, edges_path)).cache()
+    try:
+        n_edges = canonical.count()  # also materializes the cache
+        tri = triangles.triangle_count_blocked(prep.orient_by_degree(canonical)).first()[
+            "triangles"
+        ]
+        pr = pagerank.pagerank(
+            spark,
+            canonical,
+            n_iterations=pr_iterations,
+            checkpoint_dir=os.path.join(work_dir, "pr_ckpt"),
         )
-    )
+        cc = components.connected_components(
+            spark,
+            canonical,
+            max_iterations=cc_max_iterations,
+            checkpoint_dir=os.path.join(work_dir, "cc_ckpt"),
+        )
+        snapshots.write_table(
+            pr.join(cc, "vertex").select(
+                "vertex",
+                F.round("rank", 6).alias("rank"),
+                "component",
+                F.lit(int(tri)).cast("long").alias("triangles"),
+                F.lit(int(n_edges)).cast("long").alias("n_edges"),
+            ),
+            summary_path,
+        )
+    finally:
+        canonical.unpersist()
+    return snapshots.read_table(spark, summary_path)

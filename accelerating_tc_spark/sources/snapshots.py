@@ -14,9 +14,11 @@ implementation of the same three protocols, not a grep over the engine:
 
   marker-committed iteration log  write_iteration/latest_iteration
       parquet: `iter=NNNNN` dirs, completeness = Spark's _SUCCESS marker,
-      write is tmp-dir + atomic rename.
+      write is tmp-dir + atomic rename; per-partition row counts come
+      from the parquet footers.
       Iceberg: one snapshot per iteration, latest_iteration = max committed
-      snapshot's iteration property.
+      snapshot's iteration property; row counts = the manifests'
+      record_count.
 
   staged append  stage_append/publish_append
       parquet: stage under `pending/<batch_id>`, publish = idempotent
@@ -35,6 +37,7 @@ a north-star addition.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
@@ -139,21 +142,16 @@ class ParquetIterationLog:
 
     def latest(self) -> int | None:
         """Highest completed iteration, or None."""
-        if not self.root or not os.path.isdir(self.root):
-            return None
-        done = [
-            int(name.split("=")[1])
-            for name in os.listdir(self.root)
-            if name.startswith("iter=") and is_complete(os.path.join(self.root, name))
-        ]
-        return max(done) if done else None
+        done = self.completed()
+        return done[-1] if done else None
 
     def read(self, i: int) -> DataFrame:
         return self.spark.read.parquet(self.iter_dir(i))
 
     def write(self, df: DataFrame, i: int) -> DataFrame:
         """Durably commit iteration `i`; returns the read-back frame (the
-        caller's lineage cut)."""
+        caller's lineage cut), read with `df`'s schema so that no footer
+        inference job runs."""
         out = self.iter_dir(i)
         tmp = out + ".tmp"
         if os.path.exists(tmp):
@@ -162,17 +160,33 @@ class ParquetIterationLog:
         if os.path.exists(out):
             shutil.rmtree(out)
         os.rename(tmp, out)
-        return self.spark.read.parquet(out)
+        return self.spark.read.schema(df.schema).parquet(out)
 
     def completed(self) -> list[int]:
-        """All committed iterations, ascending."""
+        """All committed iterations, ascending. Only `iter=<digits>` names
+        count: a crash between the write and the rename leaves an
+        `iter=NNNNN.tmp` dir that carries its own _SUCCESS marker."""
         if not self.root or not os.path.isdir(self.root):
             return []
         return sorted(
-            int(name.split("=")[1])
-            for name in os.listdir(self.root)
-            if name.startswith("iter=") and is_complete(os.path.join(self.root, name))
+            int(m.group(1))
+            for m in (re.fullmatch(r"iter=(\d+)", n) for n in os.listdir(self.root))
+            if m and is_complete(os.path.join(self.root, m.group(0)))
         )
+
+    def partition_rows(self, i: int) -> dict[str, int]:
+        """Row count per write partition of committed iteration `i`, read
+        from its parquet footers on the driver: no Spark job (the Iceberg
+        swap reads the manifests' record_count)."""
+        import pyarrow.parquet as pq
+
+        out: dict[str, int] = {}
+        root = self.iter_dir(i)
+        for name in os.listdir(root):
+            if name.startswith("part-") and name.endswith(".parquet"):
+                pid = str(int(name.split("-")[1]))
+                out[pid] = out.get(pid, 0) + pq.read_metadata(os.path.join(root, name)).num_rows
+        return out
 
     def prune(self, keep_last: int) -> list[int]:
         """Retention policy: drop all but the newest `keep_last` committed

@@ -425,6 +425,76 @@ def test_pagerank_checkpoint_resume(spark, graph, tmp_path):
     assert len(lineage) >= 10
 
 
+def test_pagerank_resume_past_requested_rounds(spark, graph, tmp_path):
+    """A checkpoint dir left by a longer run (10 rounds) resumes a 5-round
+    run from its newest commit below round 5, not from round 9."""
+    _, canonical = graph
+    ckpt = str(tmp_path / "pr_ckpt")
+    pagerank.pagerank(spark, canonical, n_iterations=10, checkpoint_dir=ckpt)
+    assert supersteps.latest_checkpoint(ckpt) == 9
+    resumed = pagerank.pagerank_run(spark, canonical, n_iterations=5, checkpoint_dir=ckpt)
+    fresh = pagerank.pagerank(spark, canonical, n_iterations=5)
+    assert resumed.iterations == 5
+    r = {x["vertex"]: x["rank"] for x in resumed.state.collect()}
+    f = {x["vertex"]: x["rank"] for x in fresh.collect()}
+    assert set(r) == set(f)
+    assert all(abs(r[v] - f[v]) < 1e-12 for v in f)
+
+
+# Spark jobs of one checkpointed loop on the `graph` fixture; the previous
+# design (an eager cut of every round, a histogram job per round, a probe
+# job per round, footer-inference reads) ran 53 and 35
+CHECKPOINTED_LOOP_JOBS = {
+    "pagerank_run": (
+        lambda spark, c, d: pagerank.pagerank_run(spark, c, n_iterations=10, checkpoint_dir=d),
+        21,
+    ),
+    "connected_components_run": (
+        lambda spark, c, d: components.connected_components_run(spark, c, checkpoint_dir=d),
+        20,
+    ),
+}
+
+
+@pytest.mark.parametrize("call", sorted(CHECKPOINTED_LOOP_JOBS))
+def test_checkpointed_loop_job_count(spark, graph, tmp_path, monkeypatch, call):
+    """A checkpointed loop runs only the jobs durability needs: rounds
+    between commits stay lazy, a commit's lineage comes from the parquet
+    footers and its convergence probe rides on the commit write."""
+    import json
+
+    from accelerating_tc_spark.sources import snapshots
+
+    _, canonical = graph
+    probe_sums = []
+    real_sum = supersteps._SumProbe._sum
+    monkeypatch.setattr(
+        supersteps._SumProbe, "_sum", lambda self, df: probe_sums.append(1) or real_sum(self, df)
+    )
+    fn, want_jobs = CHECKPOINTED_LOOP_JOBS[call]
+    ckpt = str(tmp_path / "ckpt")
+    sc = spark.sparkContext
+    group = f"job-count-{call}"
+    sc.setJobGroup(group, group)
+    try:
+        run = fn(spark, canonical, ckpt)
+    finally:
+        sc.setJobGroup("", "")
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == want_jobs
+    # every committed CC round observed its sum on the write: the probe's
+    # own aggregate ran once, over the initial state
+    assert len(probe_sums) == (1 if call == "connected_components_run" else 0)
+
+    log = snapshots.ParquetIterationLog(spark, ckpt)
+    lines = [json.loads(x) for x in (tmp_path / "ckpt" / "lineage.jsonl").read_text().splitlines()]
+    assert [x["iteration"] for x in lines] == list(range(run.iterations))
+    committed = [x for x in lines if x["rows"] is not None]
+    assert [x["iteration"] for x in committed] == log.completed()
+    for x in committed:
+        assert sum(x["partition_rows"].values()) == x["rows"] == log.read(x["iteration"]).count()
+    assert all(x["partition_rows"] is None for x in lines if x["rows"] is None)
+
+
 def test_lineage_cutter_bounds_chains_and_survives_close(spark):
     """LineageCutter: every `every`-th cut is a parquet hard cut whose
     scratch slots are unique (lazy refs to earlier cut states stay valid),

@@ -104,3 +104,39 @@ def test_pipeline_resumes_mid_iteration(spark, tmp_path):
     r = {x["vertex"]: x["rank"] for x in resumed.collect()}
     f = {x["vertex"]: x["rank"] for x in fresh.collect()}
     assert r == f
+
+
+def test_pipeline_rerun_returns_committed_summary(spark, tmp_path, monkeypatch):
+    """A rerun on a completed work dir returns the committed summary: it
+    reads no pages and runs neither the triangle count nor either loop,
+    and neither call leaves a cached DataFrame behind."""
+    from accelerating_tc_spark.operators import components, pagerank, triangles
+
+    wd = str(tmp_path / "wd")
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    before = cache_manager.numCachedEntries()
+    first = sorted(
+        tuple(r)
+        for r in pipeline.web_graph_pipeline(
+            spark, lambda: _corpus(spark), wd, pr_iterations=3
+        ).collect()
+    )
+    assert cache_manager.numCachedEntries() == before
+
+    calls: list[str] = []
+    for mod, name in (
+        (triangles, "triangle_count_blocked"),
+        (pagerank, "pagerank"),
+        (components, "connected_components"),
+    ):
+        monkeypatch.setattr(mod, name, lambda *a, _n=name, **k: calls.append(_n))
+
+    def poisoned():
+        raise AssertionError("a rerun must not read the page source")
+
+    second = sorted(
+        tuple(r) for r in pipeline.web_graph_pipeline(spark, poisoned, wd, pr_iterations=3).collect()
+    )
+    assert cache_manager.numCachedEntries() == before
+    assert calls == []
+    assert first == second and len(first) > 0

@@ -52,6 +52,25 @@ def test_iteration_log_marker_semantics(spark, tmp_path):
     assert log.read(2).count() == 3
 
 
+def test_iteration_log_skips_leftover_tmp_dir(spark, tmp_path):
+    """A crash between the write of `iter=NNNNN.tmp` (which gets its own
+    _SUCCESS) and the rename must not break the next resume."""
+    from accelerating_tc_spark.operators import supersteps
+
+    root = str(tmp_path / "ckpt")
+    os.makedirs(root)
+    log = snapshots.ParquetIterationLog(spark, root)
+    for i in range(3):
+        log.write(spark.range(10 * (i + 1)).select(F.col("id").alias("v")), i)
+    spark.range(7).write.parquet(log.iter_dir(3) + ".tmp")
+    assert snapshots.is_complete(log.iter_dir(3) + ".tmp")
+    assert log.completed() == [0, 1, 2]
+    assert log.latest() == 2 and supersteps.latest_checkpoint(root) == 2
+    # the footer row counts of a committed iteration add up to its rows
+    hist = log.partition_rows(2)
+    assert sum(hist.values()) == log.read(2).count() == 30
+
+
 def test_append_store_stage_publish_idempotent(spark, tmp_path):
     store = snapshots.ParquetAppendStore(
         spark, str(tmp_path / "edges"), str(tmp_path / "pending")
