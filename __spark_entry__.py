@@ -31,12 +31,12 @@ from accelerating_tc_spark.operators import (  # noqa: E402
     bowtie,
     components,
     dedup,
+    diagnostics,
     hits,
     kclique,
     kcore,
     labelprop,
     maxclique,
-    order,
     pagerank,
     linkpred,
     peel,
@@ -512,7 +512,7 @@ def _q_edge_workload(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_bsr_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A11: BSR compression-ratio diagnostic — distinct 64-value base words
     per adjacency entry (forward + reverse lists) on the co-purchase graph."""
-    return order.compression_ratio(_canonical(spark, sf_dir))
+    return diagnostics.compression_ratio(_canonical(spark, sf_dir))
 
 
 def _q_web_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -3,10 +3,10 @@ set, and set-reachability (the building block the bow-tie decomposition
 composes with SCC).
 
 The reference's traversal surface is the undirected BFS-level reordering
-(porder.cpp `bfsr_bisection`, re-expressed in operators/order.py:196); the
-north star's link-graph tier needs the DIRECTED primitive a crawl analyst
-actually runs: "how many clicks from the seed list is every page?" and
-"which pages can the core reach?". Exposed as first-class operators here.
+(porder.cpp `bfsr_bisection`); the north star's link-graph tier needs the
+DIRECTED primitive a crawl analyst actually runs: "how many clicks from the
+seed list is every page?" and "which pages can the core reach?". Exposed as
+first-class operators here.
 
 Semantics (exact, and mirrored 1:1 by the recursive-CTE oracle):
 
@@ -26,7 +26,8 @@ shuffle instead of re-exchanging ~|E| rows) plus one anti-join against the
 visited set; per-round shuffled bytes are O(|frontier| + |visited|), never
 O(|E|). Rounds = min(max_depth, eccentricity of the seed set) — small on
 web-shaped graphs. Lineage is cut through the shared LineageCutter spine
-(every=8) so the plan stays O(1)-deep across deep traversals.
+(a parquet hard cut every HARD_CUT_EVERY cuts) so the plan stays O(1)-deep
+across deep traversals.
 """
 
 from __future__ import annotations
@@ -83,7 +84,7 @@ def multi_source_distances(
             .join(state, "vertex", "left_anti")
         )
 
-    with supersteps.LineageCutter(spark, every=8, prefix="bfs-cut-") as cutter:
+    with supersteps.LineageCutter(spark, prefix="bfs-cut-") as cutter:
         state = cutter.cut(seeds.select("vertex", F.lit(0).cast("long").alias("dist")))
         frontier = state.select("vertex")
         depth = 0

@@ -1,4 +1,5 @@
-"""Orientation-quality diagnostics (reference tools/, SURVEY.md A9/A10).
+"""Orientation- and layout-quality diagnostics (reference tools/, SURVEY.md
+A9/A10/A11).
 
 `orientation_balance_cost` (A9) lives in prep.py as a DataFrame agg; the
 approximation-ratio bound (A10, reference tools/approximateRatio.cpp:42-94)
@@ -9,11 +10,18 @@ on the (tiny) histogram result — semantics re-expressed from the reference:
 - lb_opt2  : case split on the high-degree vertex mass
 - ub - opt : greedy water-filling of the remaining high-degree edge mass
 - ratio    = 1 + (ub - opt) / (lb_opt + lb_opt2)
+
+`compression_ratio` (A11, reference porder.cpp:295-351 `comp_ratio`) is
+two distinct-count aggregates over the edge table.
 """
 
 from __future__ import annotations
 
 import pandas as pd
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+_PACK_SHIFT = 6  # 64-bit words (matches functions/intersect.py)
 
 
 def approximation_ratio(degree_hist: pd.DataFrame, n_vertices: int, n_edges: int) -> float:
@@ -60,3 +68,28 @@ def approximation_ratio(degree_hist: pd.DataFrame, n_vertices: int, n_edges: int
     if denom <= 0:
         return float("inf")
     return 1.0 + ub_minus_opt / denom
+
+
+def compression_ratio(canonical: DataFrame) -> DataFrame:
+    """A11: BSR compression-ratio diagnostic — distinct 64-value base words
+    per adjacency entry, for the forward (src->dst) and reverse lists; lower
+    = denser bitmaps. One row: (out_comp_ratio, in_comp_ratio, comp_ratio)."""
+    m = canonical.count()
+    out_bases = (
+        canonical.groupBy("src")
+        .agg(F.count_distinct(F.shiftright("dst", _PACK_SHIFT)).alias("b"))
+        .agg(F.sum("b").alias("t"))
+        .first()["t"]
+    )
+    in_bases = (
+        canonical.groupBy("dst")
+        .agg(F.count_distinct(F.shiftright("src", _PACK_SHIFT)).alias("b"))
+        .agg(F.sum("b").alias("t"))
+        .first()["t"]
+    )
+    out_r = out_bases / m if m else 0.0
+    in_r = in_bases / m if m else 0.0
+    return canonical.sparkSession.createDataFrame(
+        [(round(out_r, 6), round(in_r, 6), round((out_r + in_r) / 2, 6))],
+        "out_comp_ratio double, in_comp_ratio double, comp_ratio double",
+    )

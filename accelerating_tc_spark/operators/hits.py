@@ -81,7 +81,7 @@ def hits_run(
     # materialized exactly once per round). The cutter bounds the
     # localCheckpoint chain with periodic parquet hard cuts (the Spark 4.1
     # chained-localCheckpoint cliff, see supersteps.LineageCutter).
-    cutter = supersteps.LineageCutter(spark, every=8, prefix="hits-cut-")
+    cutter = supersteps.LineageCutter(spark, prefix="hits-cut-")
 
     def step(state: DataFrame, i: int) -> DataFrame:
         hub_scores = state.select("vertex", "hub")

@@ -11,8 +11,6 @@ Reference parity notes (file:line cites into /root/reference):
 - symmetrize            -> buildCSR.cu:114-120, edge_directing/A-direction.cpp:226-232
 - degree histogram      -> tricore/src/tricount_gpu.cu:37-67, Hu/preTC.cu:116-123
 - degree orientation    -> Hu/preTC.cu:125-133, tricount_gpu.cu:69-101 (redirect_edges)
-- id orientation        -> Fox/preTC.cu:92-101, org_triangle_count.cpp:20-27
-- degree-rank relabel   -> Bisson/preTC.cu:145-162, tools/directionByReorder.cpp:39-68
 - degree<=1 prune       -> Hu/preTC.cu:135-168
 - dense-ID compaction   -> tools/adjust2tc.cpp:14-36, tools/serialize.cpp:17-46
 """
@@ -59,11 +57,6 @@ def degrees(canonical: DataFrame) -> DataFrame:
     )
 
 
-def orient_by_id(canonical: DataFrame) -> DataFrame:
-    """Identity orientation: canonical rows already satisfy src < dst."""
-    return canonical
-
-
 def orient_by_degree(canonical: DataFrame, deg: DataFrame | None = None) -> DataFrame:
     """Direct each edge low-degree -> high-degree, ties by vertex id.
 
@@ -83,28 +76,6 @@ def orient_by_degree(canonical: DataFrame, deg: DataFrame | None = None) -> Data
         F.when(keep, F.col("src")).otherwise(F.col("dst")).alias("src"),
         F.when(keep, F.col("dst")).otherwise(F.col("src")).alias("dst"),
     )
-
-
-def degree_rank_relabel(canonical: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Rank vertices by (degree desc, id) and relabel edges with dense new ids.
-
-    Returns (relabeled_edges, mapping(vertex, new_id)). Rank assignment is
-    fully distributed (repartitionByRange + per-partition offsets,
-    functions/ranking.py) — no single-task global window.
-    """
-    deg = degrees(canonical)
-    mapping = dense_rank_ids(deg, [F.desc("degree"), F.asc("vertex")]).select(
-        "vertex", "new_id"
-    )
-    relabeled = (
-        canonical.join(mapping.withColumnRenamed("vertex", "src").withColumnRenamed("new_id", "new_src"), "src")
-        .join(mapping.withColumnRenamed("vertex", "dst").withColumnRenamed("new_id", "new_dst"), "dst")
-        .select(
-            F.least("new_src", "new_dst").alias("src"),
-            F.greatest("new_src", "new_dst").alias("dst"),
-        )
-    )
-    return relabeled, mapping
 
 
 def prune_low_degree(canonical: DataFrame, min_degree: int = 2, iterate: bool = False) -> DataFrame:

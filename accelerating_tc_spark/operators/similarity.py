@@ -82,27 +82,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
-def lsh_bucket(
-    embeddings: DataFrame,
-    dim: int,
-    n_planes: int = 12,
-    seed: int = 42,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Add an int bucket column: sign bits against n_planes hyperplanes.
-
-    All arithmetic is JVM array expressions over a literal plane matrix —
-    at scale this is a narrow map, no shuffle.
-    """
-    planes = _hyperplanes(dim, n_planes, seed)
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        plane_arr = F.array(*[F.lit(float(x)) for x in p])
-        bit = (_dot(F.col(vec_col), plane_arr) >= 0).cast("long")
-        bucket = bucket + F.shiftleft(bit, i)
-    return embeddings.withColumn("bucket", bucket)
-
-
 def _table_buckets(dim: int, n_planes: int, seed: int, n_tables: int) -> F.Column:
     """array<struct<t,bucket>>: one sign-bit bucket per hash table over the
     `unit` column (table t's planes derive from seed + 1000*t)."""

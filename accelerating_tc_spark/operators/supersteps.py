@@ -62,9 +62,9 @@ STATE_BROADCAST_MAX_BYTES = int(
     os.environ.get("SPARK_GRAFT_STATE_BROADCAST_MAX_MB", "64")
 ) << 20
 
-# Consecutive localCheckpoint lineage cuts `iterate` allows before a
-# parquet round-trip hard cut (the chained-localCheckpoint cliff, see
-# LineageCutter; measured on a 100k-edge k-core loop: 0.7 s rounds reach
+# Consecutive localCheckpoint lineage cuts `iterate` and LineageCutter
+# allow before a parquet round-trip hard cut (the chained-localCheckpoint
+# cliff; measured on a 100k-edge k-core loop: 0.7 s rounds reach
 # 80 s+ by round 22 without it, a parquet-cut chain is flat for 100+ rounds).
 HARD_CUT_EVERY = 8
 
@@ -136,17 +136,16 @@ class LineageCutter:
     HARD_CUT_EVERY guards `iterate` against: chains of ~15+ consecutive
     localCheckpoints degrade geometrically on Spark 4.1).
 
-    Up to `every - 1` consecutive cuts use localCheckpoint; the next cut is
-    a parquet round-trip through a scratch slot. Slots get UNIQUE names and
-    live until `close()` — callers may hold lazy references to any cut
-    state (e.g. the truss cascade's per-round dropped frames) without them
-    being invalidated by slot reuse. `close(final_df)` re-anchors the final
+    Up to `HARD_CUT_EVERY - 1` consecutive cuts use localCheckpoint; the
+    next cut is a parquet round-trip through a scratch slot. Slots get
+    UNIQUE names and live until `close()` — callers may hold lazy
+    references to any cut state (e.g. the truss cascade's per-round dropped
+    frames) without them being invalidated by slot reuse. `close(final_df)` re-anchors the final
     result in block storage before removing the scratch dir, so the
     returned DataFrame outlives the cleanup."""
 
-    def __init__(self, spark: SparkSession, every: int = 8, prefix: str = "lineage-cut-"):
+    def __init__(self, spark: SparkSession, prefix: str = "lineage-cut-"):
         self.spark = spark
-        self.every = every
         self.prefix = prefix
         self.chain = 0
         self.n_cuts = 0
@@ -156,7 +155,7 @@ class LineageCutter:
         import tempfile
 
         self.n_cuts += 1
-        if self.every and self.chain + 1 >= self.every:
+        if self.chain + 1 >= HARD_CUT_EVERY:
             if self.scratch is None:
                 self.scratch = tempfile.mkdtemp(prefix=self.prefix)
             slot = os.path.join(self.scratch, f"slot{self.n_cuts:05d}")

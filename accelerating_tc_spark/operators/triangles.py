@@ -201,6 +201,29 @@ def _broadcast_partials(oriented: DataFrame) -> DataFrame:
     return oriented.select("src", "dst").mapInArrow(probe, schema=_PARTIAL_SCHEMA), bc
 
 
+def choose_n_blocks(
+    n_edges: int,
+    parallelism: int,
+    n_blocks: int | None = None,
+    allow_broadcast: bool = True,
+) -> int:
+    """The block count the blocked plan runs for n_edges oriented edges;
+    1 means the broadcast-CSR route (auto-B is never below 8). See
+    _blocked_partials for the two routes."""
+    # the budget's `> 0` keeps the documented kill switch exact: with a 0
+    # budget an empty graph (16·0 <= 0) must still take the cogroup route
+    if (
+        allow_broadcast
+        and n_blocks is None
+        and 0 < _TC_BROADCAST_MAX_BYTES
+        and 16 * n_edges <= _TC_BROADCAST_MAX_BYTES
+    ):
+        return 1
+    if n_blocks is None:
+        return auto_n_blocks(parallelism, n_edges)
+    return n_blocks
+
+
 def _blocked_partials(
     oriented: DataFrame,
     n_blocks: int | None = None,
@@ -208,8 +231,8 @@ def _blocked_partials(
 ) -> tuple[DataFrame, list, int]:
     """Blocked plan: per-task partial counts (triangles, task_s).
 
-    Returns (partials, broadcasts_to_unpersist, chosen_n_blocks). Two
-    physical routes:
+    Returns (partials, broadcasts_to_unpersist, chosen_n_blocks); the route
+    and B come from choose_n_blocks. Two physical routes:
 
     - **broadcast CSR** (_broadcast_partials): taken when n_blocks=None and
       16·|E| bytes fit _TC_BROADCAST_MAX_BYTES; reported as n_blocks=1.
@@ -231,24 +254,20 @@ def _blocked_partials(
     (BENCH.md §5h, §8b). Only |E| drives the decision, and callers' cached
     `oriented` makes the count ~free.
     """
-    n_edges = oriented.count()
-    # the budget's `> 0` keeps the documented kill switch exact: with a 0
-    # budget an empty graph (16·0 <= 0) must still take the cogroup route
-    if (
-        allow_broadcast
-        and n_blocks is None
-        and 0 < _TC_BROADCAST_MAX_BYTES
-        and 16 * n_edges <= _TC_BROADCAST_MAX_BYTES
-    ):
+    b = choose_n_blocks(
+        oriented.count(),
+        oriented.sparkSession.sparkContext.defaultParallelism,
+        n_blocks,
+        allow_broadcast,
+    )
+    if n_blocks is None and b == 1:
         partials, bc = _broadcast_partials(oriented)
         return partials, [bc], 1
-    if n_blocks is None:
-        n_blocks = auto_n_blocks(oriented.sparkSession.sparkContext.defaultParallelism, n_edges)
     partials = _cogroup_partials(
-        tag_edge_blocks(oriented, n_blocks),
-        replicate_adjacency(prep.adjacency(oriented), n_blocks),
+        tag_edge_blocks(oriented, b),
+        replicate_adjacency(prep.adjacency(oriented), b),
     )
-    return partials, [], n_blocks
+    return partials, [], b
 
 
 def triangle_count_blocked(oriented: DataFrame, n_blocks: int | None = None) -> DataFrame:

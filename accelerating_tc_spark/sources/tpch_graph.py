@@ -24,18 +24,6 @@ JOIN lineitem b ON a.l_orderkey = b.l_orderkey
 WHERE a.l_partkey < b.l_partkey
 """
 
-# User co-event graph: users connected when they share an event_type within
-# the same hour — a second, time-derived graph for diagnostics.
-COEVENT_EDGES_SQL = """
-SELECT DISTINCT a.user_id AS src, b.user_id AS dst
-FROM events a
-JOIN events b
-  ON a.event_type = b.event_type
- AND date_trunc('hour', a.ts) = date_trunc('hour', b.ts)
-WHERE a.user_id < b.user_id
-"""
-
-
 # Skewed fixture: mod-5 sparsified co-purchase graph UNION a planted
 # mega-hub — vertex 1 adjacent to EVERY part (degree ≈ |parts|, hundreds of
 # times the sparsified average). Exercises the hub route of the blocked
@@ -152,20 +140,6 @@ def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = li.withColumnRenamed("l_partkey", "dst")
     return (
         a.join(b, "l_orderkey")
-        .where(F.col("src") < F.col("dst"))
-        .select(F.col("src").cast("long"), F.col("dst").cast("long"))
-        .distinct()
-    )
-
-
-def coevent_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).select(
-        "user_id", "event_type", F.date_trunc("hour", "ts").alias("hr")
-    )
-    a = ev.withColumnRenamed("user_id", "src")
-    b = ev.withColumnRenamed("user_id", "dst")
-    return (
-        a.join(b, ["event_type", "hr"])
         .where(F.col("src") < F.col("dst"))
         .select(F.col("src").cast("long"), F.col("dst").cast("long"))
         .distinct()

@@ -185,11 +185,10 @@ def run_headline(spark, sf_dir: str, rounds: int) -> tuple[dict, dict, dict]:
     extras["triangles_per_sec"] = (
         round(extras["triangles"] / times["tc_blocked"], 1) if times["tc_blocked"] else 0
     )
-    from accelerating_tc_spark.plans.blocking import auto_n_blocks
+    from accelerating_tc_spark.operators.triangles import choose_n_blocks
 
-    extras["tc_n_blocks_auto"] = auto_n_blocks(
-        spark.sparkContext.defaultParallelism, n_edges
-    )
+    # the B tc_blocked ran: 1 when the broadcast-CSR route took the graph
+    extras["tc_n_blocks_auto"] = choose_n_blocks(n_edges, spark.sparkContext.defaultParallelism)
     return times, extras, visits
 
 
@@ -336,10 +335,8 @@ def scaling_single(cores: int, n_vertices: int | None = None, n_edges_req: int |
     # level (the primary protocol) unless SPARK_GRAFT_SCALE_BLOCKS pins it.
     # Graph prep (degrees, orientation) is cached outside the measured
     # window.
-    from accelerating_tc_spark.plans.blocking import auto_n_blocks
-
-    chosen_b = SCALE_BLOCKS or auto_n_blocks(
-        spark.sparkContext.defaultParallelism, n_edges
+    chosen_b = triangles.choose_n_blocks(
+        n_edges, spark.sparkContext.defaultParallelism, SCALE_BLOCKS
     )
     n_measures = int(os.environ.get("SPARK_GRAFT_SCALE_MEASURES", "2"))
     n_warmups = int(os.environ.get("SPARK_GRAFT_SCALE_WARMUPS", "2"))

@@ -40,6 +40,24 @@ def test_path_distances(spark):
     assert run_bfs(spark, pairs, [1]) == {1: 0, 2: 1, 3: 2, 4: 3}
 
 
+def test_deep_path_flat_rounds(spark):
+    """A 40-level directed path drives multi_source_distances through 40
+    frontier rounds, past the ~15-chained-localCheckpoint Spark 4.1 cliff
+    (BENCH.md §6a). With LineageCutter routing every HARD_CUT_EVERY-th cut
+    through parquet the per-round wall stays flat; without it the tail
+    rounds degrade geometrically and this test times out."""
+    import time
+
+    n = 41  # vertices 0..40, path 0->1->...->40 => distances 0..40
+    t0 = time.time()
+    got = run_bfs(spark, [(i, i + 1) for i in range(n - 1)], [0])
+    wall = time.time() - t0
+    assert got == {v: v for v in range(n)}
+    # flat-cost bound, sized for a loaded box: the pre-cutter geometric
+    # tail (x2.5/round past ~15 cuts) exceeds this long before round 40
+    assert wall < 300, f"bfs 40-round wall {wall:.1f}s — lineage chain regressed"
+
+
 def test_direction_respected(spark):
     # seeding the sink reaches nothing upstream
     pairs = [(1, 2), (2, 3), (3, 4)]

@@ -1,10 +1,13 @@
-"""A10 approximation-ratio bound vs a direct python re-computation."""
+"""A10 approximation-ratio bound vs a direct python re-computation; A11
+compression ratio on a hand-counted graph."""
 
 from __future__ import annotations
 
 import pandas as pd
 
-from accelerating_tc_spark.operators.diagnostics import approximation_ratio
+from accelerating_tc_spark.operators import prep
+from accelerating_tc_spark.operators.diagnostics import approximation_ratio, compression_ratio
+from accelerating_tc_spark.sources import synthetic
 
 
 def test_star_graph_bound():
@@ -51,3 +54,14 @@ def test_powerlaw_bound_reasonable():
     m = len(clean)
     r = approximation_ratio(hist, n_vertices=n, n_edges=m)
     assert 1.0 <= r < 50
+
+
+def test_compression_ratio_known(spark):
+    # out lists: 0 -> [1, 2, 64] = bases {0, 1} -> 2 distinct
+    # in  lists: 1 -> [0], 2 -> [0], 64 -> [0]  -> 3 distinct; m = 3
+    edges = synthetic.edges_df(spark, [(0, 1), (0, 2), (0, 64)])
+    canonical = prep.canonicalize_edges(edges)
+    row = compression_ratio(canonical).collect()[0]
+    assert abs(row["out_comp_ratio"] - 2 / 3) < 1e-6
+    assert abs(row["in_comp_ratio"] - 1.0) < 1e-6
+    assert abs(row["comp_ratio"] - (2 / 3 + 1.0) / 2) < 1e-6

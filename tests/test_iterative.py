@@ -495,8 +495,8 @@ def test_checkpointed_loop_job_count(spark, graph, tmp_path, monkeypatch, call):
     assert all(x["partition_rows"] is None for x in lines if x["rows"] is None)
 
 
-def test_lineage_cutter_bounds_chains_and_survives_close(spark):
-    """LineageCutter: every `every`-th cut is a parquet hard cut whose
+def test_lineage_cutter_bounds_chains_and_survives_close(spark, monkeypatch):
+    """LineageCutter: every HARD_CUT_EVERY-th cut is a parquet hard cut whose
     scratch slots are unique (lazy refs to earlier cut states stay valid),
     and close(final) re-anchors the result so it outlives the scratch dir."""
     import os
@@ -505,7 +505,8 @@ def test_lineage_cutter_bounds_chains_and_survives_close(spark):
 
     from accelerating_tc_spark.operators import supersteps
 
-    cutter = supersteps.LineageCutter(spark, every=3, prefix="test-cutter-")
+    monkeypatch.setattr(supersteps, "HARD_CUT_EVERY", 3)
+    cutter = supersteps.LineageCutter(spark, prefix="test-cutter-")
     state = spark.range(0, 100).select(F.col("id").alias("v"))
     kept = []
     for i in range(7):
@@ -522,7 +523,7 @@ def test_lineage_cutter_bounds_chains_and_survives_close(spark):
     assert final.agg(F.min("v")).first()[0] == 7
 
 
-def test_lineage_cutter_context_manager_cleans_on_exception(spark):
+def test_lineage_cutter_context_manager_cleans_on_exception(spark, monkeypatch):
     """`with LineageCutter(...)` removes the scratch dir when the body
     raises (the r4 leak: a failed deep cascade left parquet scratch on
     disk), and stays a no-op after an explicit close()."""
@@ -532,9 +533,10 @@ def test_lineage_cutter_context_manager_cleans_on_exception(spark):
 
     from accelerating_tc_spark.operators import supersteps
 
+    monkeypatch.setattr(supersteps, "HARD_CUT_EVERY", 1)
     scratch_seen = None
     try:
-        with supersteps.LineageCutter(spark, every=1, prefix="test-ctx-") as cutter:
+        with supersteps.LineageCutter(spark, prefix="test-ctx-") as cutter:
             cutter.cut(spark.range(10).select(F.col("id").alias("v")))
             scratch_seen = cutter.scratch
             assert scratch_seen is not None and os.path.isdir(scratch_seen)
@@ -544,7 +546,7 @@ def test_lineage_cutter_context_manager_cleans_on_exception(spark):
     assert not os.path.isdir(scratch_seen)
 
     # success path: close(final) already cleaned; __exit__ must not break
-    with supersteps.LineageCutter(spark, every=1, prefix="test-ctx2-") as cutter:
+    with supersteps.LineageCutter(spark, prefix="test-ctx2-") as cutter:
         st = cutter.cut(spark.range(5).select(F.col("id").alias("v")))
         final = cutter.close(st)
     assert final.count() == 5

@@ -60,14 +60,6 @@ def test_compact_ids_dense(spark):
     assert remapped.count() == 3
 
 
-def test_degree_rank_relabel(spark):
-    edges, _ = synthetic.tiny_graph(spark, "star10")
-    relabeled, mapping = prep.degree_rank_relabel(prep.canonicalize_edges(edges))
-    m = {r["vertex"]: r["new_id"] for r in mapping.collect()}
-    assert m[0] == 0  # highest degree gets rank 0
-    assert relabeled.count() == 10
-
-
 def test_graph_stats_star_assortativity(spark):
     # star K1,4: perfectly disassortative (r = -1); known counts
     edges = spark.createDataFrame(

@@ -41,22 +41,3 @@ def test_compact_ids_dense_and_order_preserving(spark):
     assert mp == {5: 0, 100: 1, 900: 2, 7000: 3}
     got = {(r["src"], r["dst"]) for r in remapped.collect()}
     assert got == {(1, 0), (0, 2), (2, 3), (1, 3)}
-
-
-def test_degree_rank_relabel_distributed(spark):
-    edges = synthetic.powerlaw_edges(spark, n_vertices=300, n_edges=1500, seed=7)
-    canonical = prep.canonicalize_edges(edges)
-    relabeled, mapping = prep.degree_rank_relabel(canonical)
-    # rank 0 must be the max-degree vertex; ids dense over vertex count
-    deg = {r["vertex"]: r["degree"] for r in prep.degrees(canonical).collect()}
-    mp = {r["vertex"]: r["new_id"] for r in mapping.collect()}
-    assert sorted(mp.values()) == list(range(len(mp)))
-    by_rank = sorted(mp, key=mp.get)
-    ranks_key = [(-deg[v], v) for v in by_rank]
-    assert ranks_key == sorted(ranks_key)
-    # relabeled graph has identical triangle structure
-    from accelerating_tc_spark.sources.synthetic import numpy_triangle_count
-
-    orig = numpy_triangle_count([(r["src"], r["dst"]) for r in canonical.collect()])
-    new = numpy_triangle_count([(r["src"], r["dst"]) for r in relabeled.collect()])
-    assert orig == new

@@ -44,6 +44,14 @@ def test_hub_graph_all_strategies_agree(spark):
         assert got == expected
 
 
+def test_auto_strategy_parity(spark):
+    edges = synthetic.powerlaw_edges(spark, n_vertices=150, n_edges=900, seed=2)
+    pairs = [(r["src"], r["dst"]) for r in prep.canonicalize_edges(edges).collect()]
+    expected = synthetic.numpy_triangle_count(pairs)
+    got = triangles.count_triangles(edges, strategy="auto", n_blocks=4).collect()[0]["triangles"]
+    assert got == expected
+
+
 def test_blocked_broadcast_route_parity(spark, monkeypatch):
     """n_blocks=None on a small graph engages the r7 broadcast-CSR route;
     it must agree with the numpy oracle, with the budget kill switch
@@ -176,3 +184,7 @@ def test_blocked_routes_degenerate_inputs(spark, monkeypatch, case, route):
     got = _count(triangles.count_triangles(edges, strategy="blocked", n_blocks=n_blocks))
     assert got == expected
     assert bool(took_broadcast) == (route == "broadcast_csr")
+    # the B the route reports: 1 for broadcast CSR, a real B for cogroup
+    n_edges = len({(min(a, b), max(a, b)) for a, b in pairs if a != b})
+    b = triangles.choose_n_blocks(n_edges, spark.sparkContext.defaultParallelism, n_blocks)
+    assert b == 1 if route == "broadcast_csr" else b >= 2
