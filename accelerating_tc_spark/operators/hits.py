@@ -5,15 +5,16 @@ graph, an iteration sets auth(v) = Σ hub(u) over in-edges u→v, then
 hub(u) = Σ auth(v) over out-edges u→v, each L2-normalized — Kleinberg's
 classic algorithm (JACM '99, public result).
 
-Spark shape mirrors `pagerank.py`: the edge table is computed once,
-cached and hash-partitioned on each join key (one copy partitioned by
-src, one by dst), so every superstep shuffles only the small score
-table. The L2 normalizer is a 1-row aggregate cross-joined in lazily —
-no per-round `.collect()`; each round's score frames are lineage-cut
-once so the normalizer's double reference cannot compound across
-rounds. Deterministic fixed-iteration mode + 6-decimal rounding
-lets the unrolled-SQL DuckDB oracle match hash-exactly (same contract
-pattern as `pagerank_oracle_sql`).
+Spark shape mirrors `pagerank.py`: `supersteps.state_plan` (24·|V| gate)
+partitions the cached edge table and its transpose, so both half-steps are
+the same "join the score on src, sum by dst" and a round moves only score
+tables, never edges. HITS is scale invariant (normalizing auth before
+the hub half-step leaves the normalized hub unchanged), so a round carries
+un-normalized scores and needs one norm aggregate, over the state
+`iterate` has just materialized: two doubles collected to the driver.
+Deterministic fixed-iteration mode + 6-decimal rounding lets the
+unrolled-SQL DuckDB oracle match hash-exactly (same contract pattern as
+`pagerank_oracle_sql`).
 """
 
 from __future__ import annotations
@@ -24,6 +25,18 @@ from pyspark.sql import functions as F
 from . import supersteps
 
 
+def _norms(state: DataFrame) -> tuple[float, float]:
+    """L2 norms of the (hub, auth) columns; 0.0 for an all-null column."""
+    row = state.agg(*(F.sqrt(F.sum(F.col(c) * F.col(c))).alias(c) for c in ("hub", "auth"))).first()
+    return row["hub"] or 0.0, row["auth"] or 0.0
+
+
+def _scaled(col: str, norm: float) -> F.Column:
+    """`col` / `norm`, 0 where `col` is null or the norm is 0."""
+    scaled = F.coalesce(F.col(col) / F.lit(norm), F.lit(0.0)) if norm > 0 else F.lit(0.0)
+    return scaled.alias(col)
+
+
 def hits_run(
     spark: SparkSession,
     edges: DataFrame,
@@ -32,99 +45,56 @@ def hits_run(
 ) -> "supersteps.SuperstepRun":
     """Full SuperstepRun for HITS over the DIRECTED edge table (src, dst).
 
-    `run.state` is (vertex, hub, auth) after n_iterations; both score
-    vectors are L2-normalized over the full vertex set each round.
-    Vertices with no out-edges hold hub=0, no in-edges hold auth=0 —
-    they stay in the state so the output covers the whole vertex set.
-    """
-    n_part = spark.sparkContext.defaultParallelism
+    `run.state` is (vertex, hub, auth) after n_iterations, both score
+    vectors L2-normalized over the full vertex set. Vertices with no
+    out-edges hold hub=0, no in-edges hold auth=0 — they stay in the state
+    so the output covers the whole vertex set.
+
+    Each round rescales its input hubs by the previous state's hub norm,
+    then computes auth_raw = Aᵀ·hub and hub_raw = A·auth_raw; the round's
+    state is their full outer join, which holds every vertex (each one has
+    an in- or out-edge) with null for a missing side. Committed snapshots
+    under `checkpoint_dir` therefore hold these un-normalized scores, and
+    every round is committed. Resume is unaffected: every round rescales
+    its input, so the scale a snapshot carries never reaches the result.
+    The final state is normalized by its own norms, nulls set to 0; zero
+    rounds return the all-ones start unchanged."""
     e = edges.select("src", "dst")
     verts = (
         e.select(F.col("src").alias("vertex"))
         .union(e.select(F.col("dst").alias("vertex")))
         .distinct()
-        .repartition(n_part, "vertex")
         .cache()
     )
-    verts.count()
-    # Two pre-partitioned copies: the auth update joins hub scores on src,
-    # the hub update joins fresh auth scores on dst. Each copy is
-    # partitioned on ITS join key so rounds shuffle only the score table.
-    e_by_src = e.repartition(n_part, "src").cache()
-    e_by_dst = e.repartition(n_part, "dst").cache()
-    e_by_src.count()
-    e_by_dst.count()
+    plan = supersteps.state_plan(24 * verts.count())
+    fwd = plan.relation(e)
+    rev = plan.relation(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
 
-    init = verts.select(
-        "vertex", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth")
-    )
-
-    def _l2_normalized(scores: DataFrame, col: str) -> DataFrame:
-        # Lazy scalar normalizer: 1-row aggregate cross-joined in, never
-        # collected on the driver.
-        norm = scores.agg(
-            F.sqrt(F.sum(F.col(col) * F.col(col))).alias("_norm")
-        )
-        return scores.crossJoin(F.broadcast(norm)).select(
-            *[c for c in scores.columns if c != col],
-            F.when(F.col("_norm") > 0.0, F.col(col) / F.col("_norm"))
-            .otherwise(F.lit(0.0))
-            .alias(col),
-        )
-
-    # Intra-round lineage cuts: the lazy normalizer references its input
-    # twice (norm aggregate + the scaled select) and auth_n feeds both the
-    # hub update and the final state join, so an uncut round re-executes
-    # each upstream subtree 2-4x — compounding MULTIPLICATIVELY across the
-    # lazy rounds between iterate()'s cuts (measured: the sf0.01 contract
-    # row fell 405 s -> well under a minute once each score frame is
-    # materialized exactly once per round). The cutter bounds the
-    # localCheckpoint chain with periodic parquet hard cuts (the Spark 4.1
-    # chained-localCheckpoint cliff, see supersteps.LineageCutter).
-    cutter = supersteps.LineageCutter(spark, prefix="hits-cut-")
+    def spread(rel: DataFrame, scores: DataFrame, col: str, out: str) -> DataFrame:
+        # Σ col over src, by dst: exchange-free on the broadcast-state plan
+        s = plan.state(scores.withColumnRenamed("vertex", "src"))
+        return rel.join(s, "src").groupBy(F.col("dst").alias("vertex")).agg(F.sum(col).alias(out))
 
     def step(state: DataFrame, i: int) -> DataFrame:
-        hub_scores = state.select("vertex", "hub")
-        auth_raw = (
-            e_by_src.join(hub_scores, e_by_src["src"] == hub_scores["vertex"])
-            .groupBy(F.col("dst").alias("vertex"))
-            .agg(F.sum("hub").alias("auth"))
-        )
-        auth_full = cutter.cut(
-            verts.join(auth_raw, "vertex", "left").select(
-                "vertex", F.coalesce("auth", F.lit(0.0)).alias("auth")
-            )
-        )
-        auth_n = cutter.cut(_l2_normalized(auth_full, "auth"))
-        hub_raw = (
-            e_by_dst.join(auth_n, e_by_dst["dst"] == auth_n["vertex"])
-            .groupBy(F.col("src").alias("vertex"))
-            .agg(F.sum("auth").alias("hub"))
-        )
-        hub_full = cutter.cut(
-            verts.join(hub_raw, "vertex", "left").select(
-                "vertex", F.coalesce("hub", F.lit(0.0)).alias("hub")
-            )
-        )
-        hub_n = _l2_normalized(hub_full, "hub")
-        return (
-            hub_n.join(auth_n, "vertex")
-            .select("vertex", "hub", "auth")
-        )
+        hub = state.select("vertex", _scaled("hub", _norms(state)[0]))
+        auth = spread(fwd, hub, "hub", "auth")
+        return spread(rev, auth, "auth", "hub").join(auth, "vertex", "full").select("vertex", "hub", "auth")
 
-    with cutter:
-        run = supersteps.iterate(
-            spark,
-            init,
-            step,
-            max_iterations=n_iterations,
-            checkpoint_dir=checkpoint_dir,
-            checkpoint_every=3,
-            helpers=(verts, e_by_src, e_by_dst),
-        )
-        # the final state may lazily read a cutter scratch slot; close()
-        # re-anchors it in block storage before the scratch dir is removed
-        run.state = cutter.close(run.state)
+    run = supersteps.iterate(
+        spark,
+        verts.select("vertex", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth")),
+        step,
+        max_iterations=n_iterations,
+        checkpoint_dir=checkpoint_dir,
+        # the norm aggregate and the next round both read the state:
+        # materialize it once per round
+        checkpoint_every=1,
+        helpers=(verts, fwd, rev),
+    )
+    if n_iterations > 0:  # zero rounds keep the all-ones start, as the oracle does
+        nh, na = _norms(run.state)
+        final = run.state.select("vertex", _scaled("hub", nh), _scaled("auth", na))
+        run.state = final.localCheckpoint(eager=True)
     return run
 
 

@@ -188,7 +188,6 @@ def truss_numbers(
     spark: SparkSession,
     canonical: DataFrame,
     max_k: int = 64,
-    level_jump: bool = True,
 ) -> DataFrame:
     """(src, dst, truss): the largest k for which the edge survives in the
     k-truss (>= 2 for every edge). One support computation feeds the whole
@@ -201,11 +200,9 @@ def truss_numbers(
     below m+3 is a no-op, so k jumps straight to the first level that
     actually peels. Lineage cuts go through a bounded-chain cutter, so a
     deep cascade pays flat per-round cost instead of the geometric
-    localCheckpoint-chain cliff. Labels are identical to the one-level-at-
-    a-time cascade: an edge dropping at level k has truss k-1, and a jump
-    changes WHICH k processes it, not the k at which it first drops.
-    level_jump=False steps k one at a time (the pre-jump cascade, kept as
-    the same-session A/B baseline for bench --truss)."""
+    localCheckpoint-chain cliff. Labels are those of a one-level-at-a-time
+    cascade: an edge dropping at level k has truss k-1, and a jump changes
+    WHICH k processes it, not the k at which it first drops."""
     # context manager: a failed deep cascade must not leak parquet scratch
     with supersteps.LineageCutter(spark, prefix="truss-") as cutter:
         state = cutter.cut(edge_support(canonical))
@@ -215,12 +212,11 @@ def truss_numbers(
             m = state.agg(F.min("support").alias("m")).first()["m"]
             if m is None:
                 break  # nothing left to peel
-            if level_jump:
-                # first level that drops anything: support m < k-2 <=> k > m+2
-                k = max(k, int(m) + 3)
-                if k > max_k:
-                    k = max_k + 1  # leftovers are capped at max_k, as in the
-                    break          # stepwise cascade
+            # first level that drops anything: support m < k-2 <=> k > m+2
+            k = max(k, int(m) + 3)
+            if k > max_k:
+                k = max_k + 1  # leftovers are capped at max_k
+                break
             state, dropped_frames = _peel_level(state, k, 100000, cutter)
             for d in dropped_frames:
                 labeled.append(d.select("src", "dst", F.lit(k - 1).cast("long").alias("truss")))

@@ -29,8 +29,6 @@ from ..operators import components, pagerank, prep, triangles
 from ..sources import pages as pages_mod
 from ..sources import snapshots
 
-SUMMARY_COLUMNS = ("vertex", "rank", "component", "triangles", "n_edges")
-
 
 def web_graph_pipeline(
     spark: SparkSession,

@@ -746,15 +746,15 @@ def run_truss() -> None:
     t0 = time.time()
     naive_edges = naive_ktruss()
     naive_s = round(time.time() - t0, 3)
-    # full decomposition cascade A/B (opt-in): level-jumping cascade vs the
-    # stepwise baseline, same session, results asserted equal, JOB COUNTS
-    # measured via job groups — the at-depth cost is jobs × fixed overhead
+    # full decomposition cascade (opt-in): the level-jumping cascade's wall
+    # and JOB COUNT, measured via a job group — the at-depth cost is
+    # jobs × fixed overhead
     cascade = {}
     if os.environ.get("SPARK_GRAFT_TRUSS_CASCADE"):
         # Gap fixture: disjoint cliques of distinct sizes -> the truss
         # spectrum has LEVEL GAPS (a size-c clique peels at level c+1,
-        # nothing in between), the shape where the stepwise cascade burns a
-        # probe per empty level and the min-support jump skips them all.
+        # nothing in between), the shape where a stepwise cascade would burn
+        # a probe per empty level and the min-support jump skips them all.
         # A smooth Zipf spectrum has a drop at nearly every level, so it
         # cannot show the jump; real graphs sit between the two.
         sizes = [
@@ -772,29 +772,16 @@ def run_truss() -> None:
         sc = spark.sparkContext
         tracker = sc.statusTracker()
 
-        def run_cascade(tag: str, jump: bool):
-            sc.setJobGroup(tag, f"truss cascade {tag}")
-            t0 = time.time()
-            out = sorted(
-                (r["src"], r["dst"], r["truss"])
-                for r in truss.truss_numbers(
-                    spark, gap_edges, level_jump=jump
-                ).collect()
-            )
-            wall = round(time.time() - t0, 3)
-            sc.setJobGroup("", "")
-            return wall, len(tracker.getJobIdsForGroup(tag)), out
-
-        jump_s, jump_jobs, jump_rows = run_cascade("cascade_jump", True)
-        step_s, step_jobs, step_rows = run_cascade("cascade_step", False)
-        assert jump_rows == step_rows, "cascade A/B results diverged"
+        sc.setJobGroup("cascade_jump", "truss cascade")
+        t0 = time.time()
+        jump_rows = truss.truss_numbers(spark, gap_edges).collect()
+        jump_s = round(time.time() - t0, 3)
+        sc.setJobGroup("", "")
         cascade = {
             "cascade_jump_s": jump_s,
-            "cascade_step_s": step_s,
-            "cascade_jump_jobs": jump_jobs,
-            "cascade_step_jobs": step_jobs,
+            "cascade_jump_jobs": len(tracker.getJobIdsForGroup("cascade_jump")),
             "cascade_clique_sizes": sizes,
-            "n_truss_levels": len({r[2] for r in jump_rows}),
+            "n_truss_levels": len({r["truss"] for r in jump_rows}),
         }
     spark.stop()
     print(

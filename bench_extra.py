@@ -214,6 +214,14 @@ def _scc_round_plan(spark, canonical) -> str:
     )
 
 
+def _hits_round_plan(spark, canonical) -> str:
+    # round 2: the edge table and its transpose are cached but only first
+    # materialized by round 1
+    from accelerating_tc_spark.operators import hits
+
+    return _captured_round2_plan(lambda: hits.hits_run(spark, canonical, n_iterations=10))
+
+
 def _bfs_round_plan(spark, canonical) -> str:
     """Round-3 expand plan of the hand-rolled BFS loop (LineageCutter.cut
     intercepted): by round 3 the visited state is the r7 LAZY union of cut
@@ -241,9 +249,9 @@ def _bfs_round_plan(spark, canonical) -> str:
 
 def capture_iter_plans(outdir: str, suffix: str) -> None:
     """Round plans for the non-headline iterative operators (personalized
-    PageRank's seeded walk, kcore h-index, SCC min-label fixpoint, BFS
-    frontier expand) — captured from the operators' own code paths like
-    capture_plans."""
+    PageRank's seeded walk, kcore h-index, SCC min-label fixpoint, HITS
+    half-steps, BFS frontier expand) — captured from the operators' own code
+    paths like capture_plans."""
     spark = _spark()
     try:
         canonical, _ = _graph(spark)
@@ -251,6 +259,7 @@ def capture_iter_plans(outdir: str, suffix: str) -> None:
             "personalized_pagerank_round": _ppr_round_plan(spark, canonical),
             "core_numbers_round": _kcore_round_plan(spark, canonical),
             "scc_fixpoint_round": _scc_round_plan(spark, canonical),
+            "hits_round": _hits_round_plan(spark, canonical),
             "bfs_distances_round": _bfs_round_plan(spark, canonical),
         }
     finally:

@@ -81,6 +81,14 @@ def test_hits_covers_whole_vertex_set_with_zeros(spark):
     assert rows[10]["auth"] == pytest.approx(1.0)
 
 
+def test_hits_zero_rounds_keep_all_ones(spark):
+    # the oracle's s0: no round ran, so nothing is normalized
+    df = spark.createDataFrame(EDGES, "src long, dst long")
+    rows = hits.hits(spark, df, n_iterations=0).collect()
+    assert {r["vertex"] for r in rows} == {v for e in EDGES for v in e}
+    assert all(r["hub"] == r["auth"] == 1.0 for r in rows)
+
+
 def test_host_graph_rollup(spark):
     from accelerating_tc_spark.sources import pages as P
 

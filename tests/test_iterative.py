@@ -16,6 +16,7 @@ from accelerating_tc_spark.operators import (
     supersteps,
 )
 from accelerating_tc_spark.sources import synthetic
+from test_hits import _numpy_hits
 
 
 def _clean_pairs(pairs) -> list[tuple[int, int]]:
@@ -221,7 +222,7 @@ DEGENERATE = {
         (_WIDE_OFF + a * _WIDE_STRIDE, _WIDE_OFF + b * _WIDE_STRIDE) for a, b in _K4_PENDANT
     ],
 }
-# name: (call returning the (vertex, col) state, col, oracle)
+# name: (call returning the (vertex, *cols) state, col or tuple of cols, oracle)
 VERTEX_PROGRAMS = {
     "pagerank": (
         lambda spark, c: pagerank.pagerank(spark, c, n_iterations=10), "rank", numpy_pagerank
@@ -238,6 +239,11 @@ VERTEX_PROGRAMS = {
         python_label_prop,
     ),
     "core_numbers": (kcore.core_numbers, "core", python_core_numbers),
+    "hits": (
+        lambda spark, c: hits.hits(spark, c, n_iterations=10),
+        ("hub", "auth"),
+        lambda pairs: _numpy_hits(_clean_pairs(pairs), 10),
+    ),
 }
 
 
@@ -259,7 +265,8 @@ def test_vertex_programs_degenerate_inputs(spark, request, monkeypatch, case, pr
         with pytest.raises(ValueError, match="non-empty seed set"):
             run(spark, canonical)
         return
-    got = {r["vertex"]: r[col] for r in run(spark, canonical).collect()}
+    pick = (lambda r: r[col]) if isinstance(col, str) else (lambda r: tuple(r[c] for c in col))
+    got = {r["vertex"]: pick(r) for r in run(spark, canonical).collect()}
     expected = oracle(pairs) if _clean_pairs(pairs) else {}
     assert set(got) == set(expected)
     for v, want in expected.items():
@@ -493,6 +500,41 @@ def test_checkpointed_loop_job_count(spark, graph, tmp_path, monkeypatch, call):
     for x in committed:
         assert sum(x["partition_rows"].values()) == x["rows"] == log.read(x["iteration"]).count()
     assert all(x["partition_rows"] is None for x in lines if x["rows"] is None)
+
+
+def test_hits_checkpoint_resume(spark, graph, tmp_path):
+    """A 10-round run resumes a 4-round run's checkpoint dir, whose
+    snapshots hold un-normalized scores, and matches a fresh 10-round run."""
+    _, canonical = graph
+    ckpt = str(tmp_path / "hits_ckpt")
+    hits.hits_run(spark, canonical, n_iterations=4, checkpoint_dir=ckpt)
+    resumed = hits.hits_run(spark, canonical, n_iterations=10, checkpoint_dir=ckpt)
+    assert resumed.metrics[0].iteration == 4
+    assert supersteps.latest_checkpoint(ckpt) == 9
+    fresh = hits.hits(spark, canonical, n_iterations=10)
+    r = {x["vertex"]: (x["hub"], x["auth"]) for x in resumed.state.collect()}
+    f = {x["vertex"]: (x["hub"], x["auth"]) for x in fresh.collect()}
+    assert set(r) == set(f)
+    for v in f:
+        assert r[v] == pytest.approx(f[v], rel=0, abs=1e-12), v
+
+
+# Spark jobs of hits_run(n_iterations=10) on the `graph` fixture when every
+# round ran three lineage cuts and two cross-joined L2 normalizers
+HITS_JOBS_HAND_ROLLED = 185
+
+
+def test_hits_job_count(spark, graph):
+    """HITS runs one materialization and one two-norm aggregate per round:
+    at most half the jobs of the hand-rolled loop."""
+    _, canonical = graph
+    sc = spark.sparkContext
+    sc.setJobGroup("job-count-hits", "job-count-hits")
+    try:
+        hits.hits_run(spark, canonical, n_iterations=10)
+    finally:
+        sc.setJobGroup("", "")
+    assert len(sc.statusTracker().getJobIdsForGroup("job-count-hits")) <= HITS_JOBS_HAND_ROLLED // 2
 
 
 def test_lineage_cutter_bounds_chains_and_survives_close(spark, monkeypatch):

@@ -51,25 +51,25 @@ def test_truss_numbers_consistent(spark):
     assert len(tn) == len(pairs)
 
 
-def test_truss_numbers_level_jump_parity(spark):
-    """The min-support level jump must label every edge exactly as the
-    stepwise cascade does — on a gap spectrum (disjoint cliques) where the
-    jump actually skips levels."""
-    from accelerating_tc_spark.operators import prep, truss
+def py_truss_numbers(pairs):
+    """truss(e): the largest k with e in py_ktruss(pairs, k)."""
+    out, k = {}, 2
+    while edges := py_ktruss(pairs, k):
+        out.update(dict.fromkeys(edges, k))
+        k += 1
+    return out
 
+
+def test_truss_numbers_level_jump_parity(spark):
+    """The min-support level jump must label every edge as the pure-python
+    oracle does — on a gap spectrum (disjoint cliques) where the jump
+    actually skips levels."""
     rows, base = [], 0
     for c in (5, 9, 17):
         rows += [(base + i, base + j) for i in range(c) for j in range(i + 1, c)]
         base += c
     edges = prep.canonicalize_edges(spark.createDataFrame(rows, "src long, dst long"))
-
-    def decomp(jump):
-        return sorted(
-            (r["src"], r["dst"], r["truss"])
-            for r in truss.truss_numbers(spark, edges, level_jump=jump).collect()
-        )
-
-    a, b = decomp(True), decomp(False)
-    assert a == b
+    got = {(r["src"], r["dst"]): r["truss"] for r in truss.truss_numbers(spark, edges).collect()}
+    assert got == py_truss_numbers(rows)
     # clique of size c is a c-truss
-    assert {t for _, _, t in a} == {5, 9, 17}
+    assert set(got.values()) == {5, 9, 17}

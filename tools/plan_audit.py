@@ -178,8 +178,9 @@ def main() -> int:
         f"{p.count('Exchange hashpartitioning')} exchange(s); extraction is the only Python stage",
     )
 
-    # 7. HITS: state is a lineage-cut scan; the round's L2 normalizer is a
-    # broadcast of a 1-row aggregate, never a driver collect
+    # 7. HITS: the final state is divided by the two L2 norms collected from
+    # the last round's state and lineage-cut, so its plan is one checkpoint
+    # scan however many rounds ran
     from accelerating_tc_spark.operators import hits as hits_op
 
     h = hits_op.hits(spark, canonical, n_iterations=2)
